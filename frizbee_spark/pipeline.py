@@ -3,6 +3,7 @@
 Stage graph (north-rule requirements in brackets):
 
     documents    source + extract + normalize + doc_id  [byte-identity]
+    (gates)      opt-in curation gates, one GATES row each
     signatures   MinHash/band/SimHash per doc           [vectorized UDFs]
     candidates   exact ∪ LSH ∪ SimHash pairs            [salted groupBy]
     span_pairs   winnowing long-exact-span pairs        [substring pass]
@@ -42,6 +43,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -60,15 +62,6 @@ from .operators.dedup import (
     verify_pairs,
     winnow_span_pairs,
     with_doc_id,
-)
-
-STAGES = (
-    "documents", "url_dedup", "blocklist", "domain_cap", "filter",
-    "perplexity",
-    "dsir", "decontaminate", "sample",
-    "signatures",
-    "candidates", "tier_report", "span_pairs", "span_report", "verified",
-    "edges", "clusters", "canonical",
 )
 
 # stages whose output is consumed exactly once by the next stage — flowing
@@ -119,108 +112,72 @@ class PipelineConfig:
     # resume loudly (the persisted norm_text was produced by the other
     # normalization). Off by default: the driver fixture is ASCII and
     # NFC is a no-op there.
-    enable_url_dedup: bool = False  # URL-variant collapse BEFORE any
-    # content stage: canonicalize_url (case/ports/fragments/tracking
-    # params/param order) over the documents table, keeping ONE doc per
-    # canonical URL — earliest warc_ts, then lexicographic min url
-    # (crawl convention: first capture wins). The per-doc attribution
-    # table (doc_id, canonical_url, keep) is the 'url_dedup' stage
-    # output. Cheapest gate in the pipeline (never reads text — the
-    # shuffled rows are ids + urls); requires a 'url' column in the
-    # source. Off by default: the driver tables have no url column, and
-    # dedup-everything is this pipeline's contract.
-    blocklist_domains: tuple | list | None = None  # UT1-style domain
-    # blocklist between the URL collapse and the domain cap: a doc is
-    # dropped when its host or ANY parent domain is listed (suffix
-    # matching via the dot-suffix equi-join in webnorm.url_blocklist —
-    # never a LIKE theta join). The (doc_id, host, matched_domain)
-    # decision table is the 'blocklist' stage output. The SORTED list
-    # is hashed into the stage + signature meta, so editing the list
-    # fails resume loudly instead of silently reusing stale decisions.
-    # None = gate off; requires a 'url' column.
+    # -- curation gates: run in GATES order (url_dedup, blocklist,
+    # domain_cap, filter, perplexity, dsir, decontaminate, sample, budget)
+    # before any signature work. All off by default (dedup-everything is
+    # this pipeline's contract); each writes its per-doc decision table as
+    # the stage of the same name, and its config is stamped into the
+    # signatures meta, so toggling or re-tuning a gate on one workdir
+    # fails the resume loudly instead of silently mixing doc sets.
+    enable_url_dedup: bool = False  # canonicalize_url (case/ports/
+    # fragments/tracking params/param order), ONE doc per canonical URL —
+    # earliest warc_ts, then min url (crawl convention: first capture
+    # wins). Table (doc_id, canonical_url, keep). Cheapest gate: never
+    # reads text. Requires a 'url' column (the driver tables have none).
+    blocklist_domains: tuple | list | None = None  # UT1-style blocklist: a
+    # doc drops when its host or ANY parent domain is listed (dot-suffix
+    # equi-join in webnorm.url_blocklist, never a LIKE theta join). Table
+    # (doc_id, host, matched_domain); the SORTED list is hashed into the
+    # stamps. None = off; requires a 'url' column.
     domain_cap_n: int | None = None  # per-domain anti-domination cap
-    # (Gopher/C4 convention) after the URL collapse, before the content
-    # gates: each host keeps at most N docs, ranked by md5(url) with id
-    # tie-break (deterministic pseudo-random sample, append-stable);
-    # url-less rows pass through uncapped. WindowGroupLimit pre-truncates
-    # hot domains map-side, so a 10^9-doc host ships N rows per task.
-    # The (doc_id, host, domain_rank) table is the 'domain_cap' stage.
-    # None = gate off; requires a 'url' column.
-    enable_filter: bool = False  # FineWeb/Gopher-style corpus_filter gate
-    # BEFORE dedup: drop too-short/repetitive/language-less docs so no
-    # signature or verify work is spent on rows curation discards anyway.
-    # Off by default (dedup-everything is this pipeline's contract); the
-    # gate's identity is stamped into the signatures checkpoint meta, so
-    # toggling it between runs of one workdir fails the resume loudly
-    # instead of silently mixing doc sets.
-    enable_perplexity: bool = False  # bigram-LM perplexity gate (CCNet-
-    # style) AFTER the corpus_filter gate: lm_perplexity scores every
-    # surviving doc under a model trained on those same docs, and rows
-    # outside [ppl_min, ppl_max] are dropped before any signature work.
-    # The scored table is the checkpointed 'perplexity' stage (keep
-    # column included); the band is stamped into the signatures meta, so
-    # toggling or re-banding one workdir fails its resume loudly.
-    perplexity_opts: dict | None = None  # {'ppl_min': float,
-    # 'ppl_max': float, 'text_col': str}; defaults: no lower bound,
-    # ppl_max required (the filter's whole point is the high-perplexity
-    # tail). Docs with < 2 tokens have no bigrams, hence no score: the
-    # gate DROPS them (no LM signal — same rows a CCNet band drops).
-    enable_dsir: bool = False  # DSIR importance-weight gate (Xie et al.
-    # 2023) AFTER the perplexity gate: dsir_weights scores every
-    # surviving doc's hashed-bigram log-likelihood ratio under a curated
-    # TARGET corpus vs the raw (surviving) corpus, and docs below
-    # min_avg_logratio are dropped before any signature work — the
-    # tilt-toward-quality selection CCNet does with a target LM,
-    # expressed as the paper's bucket multinomials. The scored table
-    # (doc_id, n_grams, log_weight, avg_logratio, keep) is the
-    # checkpointed 'dsir' stage; docs with < 2 tokens have no bigrams,
-    # hence no ratio: the gate DROPS them (no feature signal — same
-    # contract as the perplexity gate). Config is stamped into stage +
-    # signatures meta, so re-pointing the target or re-tuning the
-    # threshold on one workdir fails its resume loudly.
+    # (Gopher/C4): each host keeps at most N docs ranked by md5(url), id
+    # tie-break (deterministic, append-stable); url-less rows pass
+    # uncapped. WindowGroupLimit pre-truncates hot hosts map-side. Table
+    # (doc_id, host, domain_rank). None = off; requires a 'url' column.
+    enable_filter: bool = False  # FineWeb/Gopher-style corpus_filter:
+    # drop too-short/repetitive/language-less docs
+    enable_perplexity: bool = False  # CCNet-style bigram-LM perplexity:
+    # lm_perplexity scores every surviving doc under a model trained on
+    # those same docs; rows outside [ppl_min, ppl_max] drop. Table keeps
+    # the score and a keep column.
+    perplexity_opts: dict | None = None  # {'ppl_min': 0.0, 'ppl_max':
+    # float (required — the gate exists to cut the high-perplexity tail),
+    # 'text_col'}. Docs with < 2 tokens have no bigrams, hence no score:
+    # the gate DROPS them (same rows a CCNet band drops).
+    enable_dsir: bool = False  # DSIR importance weights (Xie et al.
+    # 2023): each surviving doc's hashed-bigram log-likelihood ratio under
+    # a curated TARGET corpus vs the surviving corpus; docs below
+    # min_avg_logratio drop (as do docs with < 2 tokens: no signal).
+    # Table (doc_id, n_grams, log_weight, avg_logratio, keep).
     dsir_opts: dict | None = None  # {'target_path': str (required —
     # parquet with a 'text' column), 'min_avg_logratio': float
-    # (required), 'n_buckets': 4096, 'alpha': 1.0, 'text_col': auto
-    # ('text' if present else 'norm_text')}
+    # (required), 'n_buckets': 4096, 'alpha': 1.0, 'text_col'}
     enable_decontaminate: bool = False  # Bloom-filter benchmark
-    # decontamination AFTER the quality gates, BEFORE the mixing sample:
-    # every (filter/perplexity-surviving) doc is probed against an m-bit
-    # Bloom bitmap of the benchmark's k-token grams, and docs whose
-    # flagged-gram ratio exceeds the configured bound are dropped before
-    # any signature work. FPs only ever OVER-drop (a few extra docs at a
-    # quantified rate), never leak an eval gram through — the right
-    # asymmetry for a training corpus. The flagged table (doc_id,
-    # n_grams, n_flagged_grams, flagged_ratio, keep) is the checkpointed
-    # 'decontaminate' stage; config is stamped into both the stage meta
-    # and the signatures meta, so re-pointing the benchmark or re-tuning
-    # the bound on one workdir fails its resume loudly.
+    # decontamination: each surviving doc is probed against an m-bit Bloom
+    # bitmap of the benchmark's k-token grams; docs whose flagged-gram
+    # ratio exceeds the bound drop. FPs only ever OVER-drop, never leak an
+    # eval gram through. Table (doc_id, n_grams, n_flagged_grams,
+    # flagged_ratio, keep), flagged docs only.
     decontaminate_opts: dict | None = None  # {'benchmark_path': str
     # (required — parquet with a 'text' column), 'k': 8,
     # 'm_bits': 1<<20, 'n_hashes': 5, 'max_flagged_ratio': 0.0,
-    # 'text_col': auto ('text' if present else 'norm_text')}
+    # 'text_col'}
     enable_sample: bool = False  # stratified corpus-mixing downsample
-    # (textstats.stratified_sample) after the gates, before dedup:
-    # deterministic md5-per-id rates per stratum. The kept-id + weight
-    # table is the 'sample' stage output.
+    # (textstats.stratified_sample): deterministic md5-per-id rates per
+    # stratum. Table: kept ids + sample weight.
     sample_opts: dict | None = None  # kwargs for stratified_sample;
     # 'rates' is required, 'stratum_col' defaults to 'lang'
     enable_budget: bool = False  # token-budget cut (packing.
-    # select_to_budget) AFTER every quality gate: rank the surviving
-    # docs by a weight column (default: char length — "prefer long
-    # docs"; point it at a scored column for quality-ranked cuts) and
-    # keep the maximal prefix whose token sum fits the budget. The
-    # selection table (doc_id, weight, cost, cum_cost, sel_rank) is the
-    # 'budget' stage output.
-    budget_opts: dict | None = None  # {'budget': int (required — token
-    # budget), 'weight': 'chars' (doc char length, the default),
-    # 'dsir' (avg_logratio from the dsir stage — requires enable_dsir;
-    # THE DSIR use case: keep the best-N-tokens by importance weight),
-    # 'neg_perplexity' (lower perplexity ranks first — requires
-    # enable_perplexity), or any numeric documents column name; scored
-    # weights are scaled x1e6 and cast to long (the scores are already
-    # rounded to <= 6 decimals, so this is lossless and keeps the
-    # selection integer-exact), 'text_col': auto ('text' if present
-    # else 'norm_text')}
+    # select_to_budget), the last gate: rank survivors by a weight and
+    # keep the maximal prefix whose token sum fits the budget. Table
+    # (doc_id, weight, cost, cum_cost, sel_rank).
+    budget_opts: dict | None = None  # {'budget': int (required), 'weight':
+    # 'chars' (doc char length, the default), 'dsir' (the dsir stage's
+    # avg_logratio — requires enable_dsir: keep the best-N-tokens by
+    # importance), 'neg_perplexity' (requires enable_perplexity), or any
+    # numeric documents column; scores are scaled x1e6 to exact longs,
+    # 'text_col'}. Every gate's 'text_col' defaults to 'text' if present,
+    # else 'norm_text'.
     extractor: str = "shell"  # html -> extracted_text strategy when the
     # source has an 'html' column. "shell": the sandbox corpus's fixed
     # <html><body> shell is a substring slice (byte-identity with 'text'
@@ -340,6 +297,320 @@ class CheckpointStore:
             fp = os.path.join(d, f)
             out.append((i, pq.read_metadata(fp).num_rows, os.path.getsize(fp)))
         return out
+
+
+# -- curation gates ---------------------------------------------------------
+#
+# The opt-in gates between `documents` and `signatures`, in run order (see
+# the PipelineConfig fields for what each one decides). A gate's
+# ``prepare(spark, cfg, documents, out)`` returns None when the gate is
+# off, else ``(compute, stage_meta, signature_stamp)``: the decision-table
+# thunk for `_stage` (it closes over the documents frame the gate was
+# handed, so each gate judges exactly the set its predecessors kept), the
+# stage's own `_meta.json` stamp (None: unstamped), and the gate's entry in
+# the signatures meta. A gate-off run stamps nothing, so its checkpoints
+# stay byte-identical to ones written before the gate existed.
+
+
+def _text_col(documents: DataFrame) -> str:
+    # a gate must judge the text dedup actually consumes: an html-only
+    # source has no raw 'text' column after the documents checkpoint
+    # (only norm_text). The RESOLVED column is stamped, so two workdirs
+    # whose gates read different columns are different families.
+    return "text" if "text" in documents.columns else "norm_text"
+
+
+def _require_url(documents: DataFrame, cfg_field: str) -> None:
+    if "url" not in documents.columns:
+        raise ValueError(
+            f"{cfg_field} requires a 'url' column in the source (the gate "
+            "is keyed on the url; the driver parquet tables have none — it "
+            "is for crawl-shaped corpora)"
+        )
+
+
+def _gate_opts(cfg, cfg_field: str, opts_field: str, required: dict,
+               defaults: dict) -> dict:
+    """The gate's effective opts: ``cfg.<opts_field>`` with every
+    ``required`` key present (value: why it is needed) and ``defaults``
+    filled in."""
+    opts = dict(getattr(cfg, opts_field) or {})
+    for key, why in required.items():
+        if key not in opts:
+            raise ValueError(
+                f"{cfg_field} requires {opts_field}[{key!r}] ({why})")
+    for key, value in defaults.items():
+        opts.setdefault(key, value)
+    return opts
+
+
+def _stamp(gate_id: str, opts: dict, keys: tuple) -> dict:
+    return {"gate": gate_id, **{k: opts[k] for k in keys}}
+
+
+def _url_dedup(spark, cfg, documents, out):
+    # first: the window shuffles only (doc_id, url, warc_ts, canonical)
+    # rows, and every content gate downstream sees one doc per URL
+    if not cfg.enable_url_dedup:
+        return None
+    from .operators.webnorm import canonicalize_url
+
+    _require_url(documents, "enable_url_dedup")
+    ts = ["warc_ts"] if "warc_ts" in documents.columns else []
+
+    def compute():
+        c = canonicalize_url(documents.select("doc_id", "url", *ts))
+        order = [F.col(k).asc() for k in (*ts, "url", "doc_id")]
+        w = Window.partitionBy("canonical_url").orderBy(*order)
+        return c.select(
+            "doc_id", "canonical_url",
+            (F.row_number().over(w) == 1).alias("keep"),
+        )
+
+    stamp = {"gate": "url-canonical-v1"}
+    return compute, stamp, stamp
+
+
+def _blocklist(spark, cfg, documents, out):
+    # like url_dedup, only (doc_id, host, suffix) rows ever move; the
+    # stage is the DROP table, so documents anti-join it
+    if cfg.blocklist_domains is None:
+        return None
+    import hashlib
+
+    from .operators.webnorm import url_blocklist
+
+    _require_url(documents, "blocklist_domains")
+    domains = sorted({str(x).lower().strip(".") for x in cfg.blocklist_domains})
+    if not domains:
+        raise ValueError("blocklist_domains must be non-empty "
+                         "when set (use None to disable)")
+    sha = hashlib.sha256("\n".join(domains).encode()).hexdigest()[:16]
+    return (
+        lambda: url_blocklist(documents.select("doc_id", "url"), domains),
+        {"gate": "url-blocklist-suffix-v1", "n_domains": len(domains),
+         "list_sha": sha},
+        {"gate": "url-blocklist-suffix-v1", "list_sha": sha},
+    )
+
+
+def _domain_cap(spark, cfg, documents, out):
+    if cfg.domain_cap_n is None:
+        return None
+    from .operators.webnorm import domain_cap
+
+    _require_url(documents, "domain_cap_n")
+    cap = int(cfg.domain_cap_n)
+    stamp = {"gate": "domain-cap-md5-v1", "cap": cap}
+    return (lambda: domain_cap(documents.select("doc_id", "url"), cap=cap),
+            stamp, stamp)
+
+
+def _filter(spark, cfg, documents, out):
+    if not cfg.enable_filter:
+        return None
+    from .operators.textstats import corpus_filter
+
+    opts = _gate_opts(cfg, "enable_filter", "filter_opts", {},
+                      {"text_col": _text_col(documents)})
+    return (lambda: corpus_filter(documents, **opts), None,
+            {"gate": "corpus_filter-v1", **opts})
+
+
+def _perplexity(spark, cfg, documents, out):
+    if not cfg.enable_perplexity:
+        return None
+    from .operators.textstats import lm_perplexity
+
+    opts = _gate_opts(
+        cfg, "enable_perplexity", "perplexity_opts",
+        {"ppl_max": "the gate exists to cut the high-perplexity tail"},
+        {"ppl_min": 0.0, "text_col": _text_col(documents)},
+    )
+    lo, hi = float(opts["ppl_min"]), float(opts["ppl_max"])
+
+    def compute():
+        scored = lm_perplexity(documents, text_col=opts["text_col"])
+        return scored.withColumn(
+            "keep", (F.col("perplexity") >= lo) & (F.col("perplexity") <= hi))
+
+    stamp = _stamp("lm-perplexity-bigram-laplace-v1", opts,
+                   ("ppl_min", "ppl_max", "text_col"))
+    return compute, stamp, stamp
+
+
+def _dsir(spark, cfg, documents, out):
+    if not cfg.enable_dsir:
+        return None
+    from .operators.textstats import dsir_weights
+
+    opts = _gate_opts(
+        cfg, "enable_dsir", "dsir_opts",
+        {"target_path": "parquet with a 'text' column — the curated target "
+                        "distribution to tilt toward",
+         "min_avg_logratio": "the gate exists to cut the off-target tail"},
+        {"n_buckets": 4096, "alpha": 1.0, "text_col": _text_col(documents)},
+    )
+    floor = float(opts["min_avg_logratio"])
+
+    def compute():
+        tgt = spark.read.parquet(opts["target_path"]).select(
+            F.col("text").alias(opts["text_col"]))
+        scored = dsir_weights(
+            documents, tgt, n_buckets=int(opts["n_buckets"]),
+            alpha=float(opts["alpha"]), text_col=opts["text_col"],
+        )
+        return scored.withColumn("keep", F.col("avg_logratio") >= F.lit(floor))
+
+    stamp = _stamp("dsir-hashed-bigram-v1", opts,
+                   ("target_path", "min_avg_logratio", "n_buckets", "alpha",
+                    "text_col"))
+    return compute, stamp, stamp
+
+
+def _decontaminate(spark, cfg, documents, out):
+    # zero joins, zero corpus text shuffle: the bitmap rides the plan as
+    # one array literal. The table holds FLAGGED docs only, so the gate
+    # anti-joins the over-threshold ids.
+    if not cfg.enable_decontaminate:
+        return None
+    from .operators.textstats import bloom_decontaminate
+
+    opts = _gate_opts(
+        cfg, "enable_decontaminate", "decontaminate_opts",
+        {"benchmark_path": "parquet with a 'text' column — the eval set to "
+                           "scrub against"},
+        {"k": 8, "m_bits": 1 << 20, "n_hashes": 5, "max_flagged_ratio": 0.0,
+         "text_col": _text_col(documents)},
+    )
+    max_ratio = float(opts["max_flagged_ratio"])
+
+    def compute():
+        bench = spark.read.parquet(opts["benchmark_path"]).select(
+            F.col("text").alias(opts["text_col"]))
+        flagged = bloom_decontaminate(
+            documents, bench, k=int(opts["k"]), m_bits=int(opts["m_bits"]),
+            n_hashes=int(opts["n_hashes"]), text_col=opts["text_col"],
+        )
+        return flagged.withColumn(
+            "keep", F.col("flagged_ratio") <= F.lit(max_ratio))
+
+    stamp = _stamp("bloom-decontaminate-v1", opts,
+                   ("benchmark_path", "k", "m_bits", "n_hashes",
+                    "max_flagged_ratio", "text_col"))
+    return compute, stamp, stamp
+
+
+def _sample(spark, cfg, documents, out):
+    # pure per-row Catalyst, zero shuffle
+    if not cfg.enable_sample:
+        return None
+    from .operators.textstats import stratified_sample
+
+    opts = _gate_opts(
+        cfg, "enable_sample", "sample_opts",
+        {"rates": "per-stratum keep rates for stratified_sample"},
+        {"stratum_col": "lang"},
+    )
+    return (
+        lambda: stratified_sample(
+            documents.select("doc_id", opts["stratum_col"]), **opts,
+        ).select("doc_id", "sample_u", "sample_weight"),
+        None,
+        {"gate": "stratified-md5-v1", **opts},
+    )
+
+
+def _budget(spark, cfg, documents, out):
+    # the LAST gate: every upstream gate has shaped the pool, this one
+    # sizes it (two-pass distributed prefix sum)
+    if not cfg.enable_budget:
+        return None
+    from .operators.packing import select_to_budget
+
+    opts = _gate_opts(
+        cfg, "enable_budget", "budget_opts",
+        {"budget": "the token budget the prefix must fit"},
+        {"weight": "chars", "text_col": _text_col(documents)},
+    )
+    tcol, wspec = opts["text_col"], opts["weight"]
+    if wspec == "dsir" and not cfg.enable_dsir:
+        raise ValueError(
+            "budget_opts weight='dsir' requires enable_dsir=True "
+            "(the weight is the dsir stage's avg_logratio)"
+        )
+    if wspec == "neg_perplexity" and not cfg.enable_perplexity:
+        raise ValueError(
+            "budget_opts weight='neg_perplexity' requires "
+            "enable_perplexity=True (the weight is the perplexity "
+            "stage's score)"
+        )
+    # stage scores are rounded to <= 6 decimals, so the x1e6 long is
+    # lossless — selection stays integer-exact
+    scores = {"dsir": (out.get("dsir"), F.col("avg_logratio") * 1e6),
+              "neg_perplexity": (out.get("perplexity"),
+                                 -F.col("perplexity") * 1e6)}
+
+    def compute():
+        base = documents.select(
+            "doc_id",
+            F.size(F.split(F.trim(F.col(tcol)), r"\s+")).cast("long").alias("_c"),
+            *([] if wspec in scores
+              else [(F.length(F.col(tcol)) if wspec == "chars"
+                     else F.col(wspec)).cast("long").alias("_w")]),
+        )
+        if wspec in scores:
+            # inner join: docs the scorer could not score (no n-grams)
+            # carry no signal and are excluded
+            table, expr = scores[wspec]
+            base = base.join(
+                table.select("doc_id", F.round(expr, 0).cast("long").alias("_w")),
+                "doc_id",
+            )
+        return select_to_budget(base, budget=int(opts["budget"]),
+                                weight_col="_w", cost_col="_c")
+
+    return (compute,
+            _stamp("budget-prefix-sum-v1", opts, ("budget", "weight", "text_col")),
+            {"gate": "budget-prefix-sum-v1", **opts})
+
+
+class Gate(NamedTuple):
+    name: str            # stage name: checkpoint dir, `out` key, run(until=)
+    cfg_field: str       # PipelineConfig field that turns the gate on
+    stamp_key: str       # the gate's key in the signatures meta
+    prepare: Callable    # (spark, cfg, documents, out) -> None | (compute,
+    #                      stage_meta, signature_stamp)
+    rows: str | None     # decision rows driving the join (SQL; None: all)
+    how: str             # "left_semi" keeps those docs, "left_anti" drops them
+
+
+GATES = (
+    Gate("url_dedup", "enable_url_dedup", "url_gate", _url_dedup,
+         "keep", "left_semi"),
+    Gate("blocklist", "blocklist_domains", "blocklist_gate", _blocklist,
+         None, "left_anti"),
+    Gate("domain_cap", "domain_cap_n", "domain_cap_gate", _domain_cap,
+         None, "left_semi"),
+    Gate("filter", "enable_filter", "input_gate", _filter,
+         "keep", "left_semi"),
+    Gate("perplexity", "enable_perplexity", "perplexity_gate", _perplexity,
+         "keep", "left_semi"),
+    Gate("dsir", "enable_dsir", "dsir_gate", _dsir,
+         "keep", "left_semi"),
+    Gate("decontaminate", "enable_decontaminate", "decontaminate_gate",
+         _decontaminate, "NOT keep", "left_anti"),
+    Gate("sample", "enable_sample", "sample_gate", _sample,
+         None, "left_semi"),
+    Gate("budget", "enable_budget", "budget_gate", _budget,
+         None, "left_semi"),
+)
+
+STAGES = (
+    "documents", *(g.name for g in GATES), "signatures",
+    "candidates", "tier_report", "span_pairs", "span_report", "verified",
+    "edges", "clusters", "canonical",
+)
 
 
 class NearDupPipeline:
@@ -493,6 +764,18 @@ class NearDupPipeline:
         """
         from .util import release_tracked
 
+        if until not in STAGES:
+            raise ValueError(
+                f"run(until={until!r}): unknown stage (expected one of "
+                f"{', '.join(STAGES)})"
+            )
+        if until == "tier_report" and not self.cfg.enable_tier_report:
+            # a stage name implies its stage ran (same contract as an
+            # off gate's name, checked in the gate loop)
+            raise ValueError(
+                "run(until='tier_report') requires "
+                "cfg.enable_tier_report=True (the attribution pass is opt-in)"
+            )
         try:
             return self._run(docs, input_path, until)
         finally:
@@ -637,479 +920,39 @@ class NearDupPipeline:
                     self.store.invalidate(st)
                 raise AssertionError(msg)
 
+        def stop():
+            _join_check()
+            self.flush_metrics()
+            return out
+
         if until == "documents":
-            _join_check()
-            self.flush_metrics()
-            return out
+            return stop()
 
-        # URL-variant collapse: the cheapest gate runs first — no text is
-        # read, the window shuffles only (doc_id, url, warc_ts, canonical)
-        # rows, and every content stage downstream (filter included) sees
-        # one doc per canonical URL.
-        if cfg.enable_url_dedup:
-            from .operators.webnorm import canonicalize_url
-
-            if "url" not in documents.columns:
-                raise ValueError(
-                    "enable_url_dedup requires a 'url' column in the source "
-                    "(the driver parquet tables have none — this gate is for "
-                    "crawl-shaped corpora)"
-                )
-            has_ts = "warc_ts" in documents.columns
-            docs_for_url = documents  # bind NOW, like the other gates
-
-            def s_url_dedup():
-                cols = ["doc_id", "url"] + (["warc_ts"] if has_ts else [])
-                c = canonicalize_url(docs_for_url.select(*cols))
-                order = ([F.col("warc_ts").asc()] if has_ts else []) + [
-                    F.col("url").asc(), F.col("doc_id").asc()]
-                w = Window.partitionBy("canonical_url").orderBy(*order)
-                return c.select(
-                    "doc_id", "canonical_url",
-                    (F.row_number().over(w) == 1).alias("keep"),
-                )
-
-            ud = self._stage("url_dedup", s_url_dedup,
-                             meta={"gate": "url-canonical-v1"})
-            out["url_dedup"] = ud
-            documents = documents.join(
-                ud.filter("keep").select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "url_dedup":
-            if not cfg.enable_url_dedup:
-                raise ValueError(
-                    "run(until='url_dedup') requires cfg.enable_url_dedup="
-                    "True (the URL collapse is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # UT1-style domain blocklist: like url_dedup, only (doc_id,
-        # host, suffix) rows ever move — text is untouched. The stage
-        # output is the DROP decision table; documents anti-join it.
-        blocklist_hash = None
-        if cfg.blocklist_domains is not None:
-            import hashlib as _hashlib
-
-            from .operators.webnorm import url_blocklist
-
-            if "url" not in documents.columns:
-                raise ValueError(
-                    "blocklist_domains requires a 'url' column in the "
-                    "source (the gate is keyed on the url's host)"
-                )
-            bl_domains = sorted({str(d).lower().strip(".")
-                                 for d in cfg.blocklist_domains})
-            if not bl_domains:
-                raise ValueError("blocklist_domains must be non-empty "
-                                 "when set (use None to disable)")
-            blocklist_hash = _hashlib.sha256(
-                "\n".join(bl_domains).encode()).hexdigest()[:16]
-            docs_for_bl = documents
-
-            def s_blocklist():
-                return url_blocklist(docs_for_bl.select("doc_id", "url"),
-                                     bl_domains)
-
-            bld = self._stage("blocklist", s_blocklist,
-                              meta={"gate": "url-blocklist-suffix-v1",
-                                    "n_domains": len(bl_domains),
-                                    "list_sha": blocklist_hash})
-            out["blocklist"] = bld
-            documents = documents.join(
-                bld.select("doc_id"), "doc_id", "left_anti"
-            )
-        if until == "blocklist":
-            if cfg.blocklist_domains is None:
-                raise ValueError(
-                    "run(until='blocklist') requires cfg.blocklist_domains "
-                    "(the blocklist gate is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # per-domain anti-domination cap: like url_dedup, shuffles only
-        # (doc_id, url, host) rows — and WindowGroupLimit truncates each
-        # host to N rows map-side before even that.
-        if cfg.domain_cap_n is not None:
-            from .operators.webnorm import domain_cap
-
-            if "url" not in documents.columns:
-                raise ValueError(
-                    "domain_cap_n requires a 'url' column in the source "
-                    "(the cap is keyed on the url's host)"
-                )
-            docs_for_cap = documents
-            cap_n = int(cfg.domain_cap_n)
-
-            def s_domain_cap():
-                return domain_cap(docs_for_cap.select("doc_id", "url"),
-                                  cap=cap_n)
-
-            dc = self._stage("domain_cap", s_domain_cap,
-                             meta={"gate": "domain-cap-md5-v1", "cap": cap_n})
-            out["domain_cap"] = dc
-            documents = documents.join(
-                dc.select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "domain_cap":
-            if cfg.domain_cap_n is None:
-                raise ValueError(
-                    "run(until='domain_cap') requires cfg.domain_cap_n "
-                    "(the per-domain cap is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        filter_opts_eff: dict = {}
-        if cfg.enable_filter:
-            # curation gate: the decision table is a first-class output;
-            # every downstream stage (span branch included — `documents`
-            # is rebound before the closures below capture it) sees only
-            # kept docs. left-semi join: no column duplication, and AQE
-            # broadcasts the id side when the kept set is small relative
-            # to the corpus.
-            from .operators.textstats import corpus_filter
-
-            # the gate must judge the text dedup actually consumes: an
-            # html-only source has no raw 'text' column after the
-            # documents checkpoint (only norm_text), so default the gate
-            # onto whichever exists. The RESOLVED column is stamped into
-            # the signature meta below — two workdirs whose gates read
-            # different columns are different families.
-            filter_opts_eff = dict(cfg.filter_opts or {})
-            filter_opts_eff.setdefault(
-                "text_col",
-                "text" if "text" in documents.columns else "norm_text",
-            )
-            decisions = self._stage(
-                "filter",
-                lambda: corpus_filter(documents, **filter_opts_eff),
-            )
-            out["filter"] = decisions
-            documents = documents.join(
-                decisions.filter("keep").select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "filter":
-            if not cfg.enable_filter:
-                # asking for the gate's decision table with the gate off
-                # would silently return no 'filter' key — every other
-                # stage name implies its stage ran, so this one must too
-                raise ValueError(
-                    "run(until='filter') requires cfg.enable_filter=True "
-                    "(the corpus_filter gate is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # perplexity gate: score the (filter-surviving) docs under a
-        # bigram LM trained on those same docs, keep the configured band.
-        # Runs BEFORE the span/signature closures capture `documents`.
-        ppl_opts_eff: dict = {}
-        if cfg.enable_perplexity:
-            from .operators.textstats import lm_perplexity
-
-            ppl_opts_eff = dict(cfg.perplexity_opts or {})
-            if "ppl_max" not in ppl_opts_eff:
-                raise ValueError(
-                    "enable_perplexity requires perplexity_opts['ppl_max'] "
-                    "— the gate exists to cut the high-perplexity tail"
-                )
-            ppl_opts_eff.setdefault("ppl_min", 0.0)
-            ppl_opts_eff.setdefault(
-                "text_col",
-                "text" if "text" in documents.columns else "norm_text",
-            )
-            ppl_min = float(ppl_opts_eff["ppl_min"])
-            ppl_max = float(ppl_opts_eff["ppl_max"])
-            docs_for_ppl = documents  # bind NOW: the closure must score
-            # the gated set even after `documents` is rebound below
-
-            def s_perplexity():
-                scored = lm_perplexity(
-                    docs_for_ppl, text_col=ppl_opts_eff["text_col"])
-                return scored.withColumn(
-                    "keep",
-                    (F.col("perplexity") >= ppl_min)
-                    & (F.col("perplexity") <= ppl_max),
-                )
-
-            ppl = self._stage(
-                "perplexity", s_perplexity,
-                meta={"gate": "lm-perplexity-bigram-laplace-v1",
-                      **{k: ppl_opts_eff[k]
-                         for k in ("ppl_min", "ppl_max", "text_col")}},
-            )
-            out["perplexity"] = ppl
-            documents = documents.join(
-                ppl.filter("keep").select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "perplexity":
-            if not cfg.enable_perplexity:
-                raise ValueError(
-                    "run(until='perplexity') requires "
-                    "cfg.enable_perplexity=True (the gate is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # DSIR gate: score the (perplexity-surviving) docs' hashed-bigram
-        # likelihood ratio against a curated target corpus, keep docs at
-        # or above the configured floor.
-        dsir_opts_eff: dict = {}
-        if cfg.enable_dsir:
-            from .operators.textstats import dsir_weights
-
-            dsir_opts_eff = dict(cfg.dsir_opts or {})
-            if "target_path" not in dsir_opts_eff:
-                raise ValueError(
-                    "enable_dsir requires dsir_opts['target_path'] "
-                    "(parquet with a 'text' column — the curated target "
-                    "distribution to tilt toward)"
-                )
-            if "min_avg_logratio" not in dsir_opts_eff:
-                raise ValueError(
-                    "enable_dsir requires dsir_opts['min_avg_logratio'] "
-                    "— the gate exists to cut the off-target tail"
-                )
-            dsir_opts_eff.setdefault("n_buckets", 4096)
-            dsir_opts_eff.setdefault("alpha", 1.0)
-            dsir_opts_eff.setdefault(
-                "text_col",
-                "text" if "text" in documents.columns else "norm_text",
-            )
-            dsir_floor = float(dsir_opts_eff["min_avg_logratio"])
-            docs_for_dsir = documents  # bind NOW, like the other gates
-
-            def s_dsir():
-                tgt = self.spark.read.parquet(
-                    dsir_opts_eff["target_path"]
-                ).select(F.col("text").alias(dsir_opts_eff["text_col"]))
-                scored = dsir_weights(
-                    docs_for_dsir, tgt,
-                    n_buckets=int(dsir_opts_eff["n_buckets"]),
-                    alpha=float(dsir_opts_eff["alpha"]),
-                    text_col=dsir_opts_eff["text_col"],
-                )
-                return scored.withColumn(
-                    "keep", F.col("avg_logratio") >= F.lit(dsir_floor)
-                )
-
-            dsir = self._stage(
-                "dsir", s_dsir,
-                meta={"gate": "dsir-hashed-bigram-v1",
-                      **{k: dsir_opts_eff[k]
-                         for k in ("target_path", "min_avg_logratio",
-                                   "n_buckets", "alpha", "text_col")}},
-            )
-            out["dsir"] = dsir
-            documents = documents.join(
-                dsir.filter("keep").select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "dsir":
-            if not cfg.enable_dsir:
-                raise ValueError(
-                    "run(until='dsir') requires cfg.enable_dsir=True "
-                    "(the gate is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # benchmark decontamination: probe every surviving doc's k-grams
-        # against the Bloom bitmap of the benchmark set, drop docs whose
-        # flagged ratio exceeds the bound. Zero joins, zero corpus text
-        # shuffle — the bitmap rides the plan as one array literal.
-        decon_opts_eff: dict = {}
-        if cfg.enable_decontaminate:
-            from .operators.textstats import bloom_decontaminate
-
-            decon_opts_eff = dict(cfg.decontaminate_opts or {})
-            if "benchmark_path" not in decon_opts_eff:
-                raise ValueError(
-                    "enable_decontaminate requires decontaminate_opts"
-                    "['benchmark_path'] (parquet with a 'text' column — "
-                    "the eval set to scrub against)"
-                )
-            decon_opts_eff.setdefault("k", 8)
-            decon_opts_eff.setdefault("m_bits", 1 << 20)
-            decon_opts_eff.setdefault("n_hashes", 5)
-            decon_opts_eff.setdefault("max_flagged_ratio", 0.0)
-            decon_opts_eff.setdefault(
-                "text_col",
-                "text" if "text" in documents.columns else "norm_text",
-            )
-            max_ratio = float(decon_opts_eff["max_flagged_ratio"])
-            docs_for_decon = documents  # bind NOW, like the other gates
-
-            def s_decontaminate():
-                bench = self.spark.read.parquet(
-                    decon_opts_eff["benchmark_path"]
-                ).select(F.col("text").alias(decon_opts_eff["text_col"]))
-                flagged = bloom_decontaminate(
-                    docs_for_decon, bench,
-                    k=int(decon_opts_eff["k"]),
-                    m_bits=int(decon_opts_eff["m_bits"]),
-                    n_hashes=int(decon_opts_eff["n_hashes"]),
-                    text_col=decon_opts_eff["text_col"],
-                )
-                return flagged.withColumn(
-                    "keep", F.col("flagged_ratio") <= F.lit(max_ratio)
-                )
-
-            dec = self._stage(
-                "decontaminate", s_decontaminate,
-                meta={"gate": "bloom-decontaminate-v1",
-                      **{k: decon_opts_eff[k]
-                         for k in ("benchmark_path", "k", "m_bits",
-                                   "n_hashes", "max_flagged_ratio",
-                                   "text_col")}},
-            )
-            out["decontaminate"] = dec
-            # the stage table holds FLAGGED docs only — unflagged docs
-            # are implicitly kept, so the drop is an anti-join on the
-            # over-threshold ids (a small broadcast side by construction)
-            documents = documents.join(
-                dec.filter(~F.col("keep")).select("doc_id"),
-                "doc_id", "left_anti",
-            )
-        if until == "decontaminate":
-            if not cfg.enable_decontaminate:
-                raise ValueError(
-                    "run(until='decontaminate') requires "
-                    "cfg.enable_decontaminate=True (the gate is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # corpus-mixing downsample: deterministic per-stratum md5 rates
-        # (pure per-row Catalyst — flow-through, zero shuffle)
-        sample_opts_eff: dict = {}
-        if cfg.enable_sample:
-            from .operators.textstats import stratified_sample
-
-            sample_opts_eff = dict(cfg.sample_opts or {})
-            if "rates" not in sample_opts_eff:
-                raise ValueError(
-                    "enable_sample requires sample_opts['rates'] "
-                    "(per-stratum keep rates for stratified_sample)"
-                )
-            sample_opts_eff.setdefault("stratum_col", "lang")
-            docs_for_sample = documents
-            kept = self._stage(
-                "sample",
-                lambda: stratified_sample(
-                    docs_for_sample.select(
-                        "doc_id", sample_opts_eff["stratum_col"]),
-                    **sample_opts_eff,
-                ).select("doc_id", "sample_u", "sample_weight"),
-            )
-            out["sample"] = kept
-            documents = documents.join(
-                kept.select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "sample":
-            if not cfg.enable_sample:
-                raise ValueError(
-                    "run(until='sample') requires cfg.enable_sample=True "
-                    "(the downsample is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
-
-        # token-budget cut: the LAST content gate — every upstream gate
-        # has already shaped the pool; this one sizes it. Two-pass
-        # distributed prefix sum (see packing.select_to_budget); the
-        # weight defaults to char length so the gate is usable with no
-        # scored column, and any numeric column (perplexity band score,
-        # dsir log-weight joined upstream) slots in via budget_opts.
-        budget_opts_eff: dict = {}
-        if cfg.enable_budget:
-            from .operators.packing import select_to_budget
-
-            budget_opts_eff = dict(cfg.budget_opts or {})
-            if "budget" not in budget_opts_eff:
-                raise ValueError(
-                    "enable_budget requires budget_opts['budget'] "
-                    "(the token budget the prefix must fit)"
-                )
-            budget_opts_eff.setdefault("weight", "chars")
-            budget_opts_eff.setdefault(
-                "text_col",
-                "text" if "text" in documents.columns else "norm_text",
-            )
-            tcol = budget_opts_eff["text_col"]
-            wspec = budget_opts_eff["weight"]
-            if wspec == "dsir" and not cfg.enable_dsir:
-                raise ValueError(
-                    "budget_opts weight='dsir' requires enable_dsir=True "
-                    "(the weight is the dsir stage's avg_logratio)"
-                )
-            if wspec == "neg_perplexity" and not cfg.enable_perplexity:
-                raise ValueError(
-                    "budget_opts weight='neg_perplexity' requires "
-                    "enable_perplexity=True (the weight is the perplexity "
-                    "stage's score)"
-                )
-            docs_for_budget = documents  # bind NOW (rebound below)
-            score_tables = {"dsir": out.get("dsir"),
-                            "neg_perplexity": out.get("perplexity")}
-
-            def s_budget():
-                base = docs_for_budget.select(
-                    "doc_id",
-                    F.size(F.split(F.trim(F.col(tcol)), r"\s+"))
-                    .cast("long").alias("_c"),
-                    *([] if wspec in score_tables
-                      else [(F.length(F.col(tcol)) if wspec == "chars"
-                             else F.col(wspec)).cast("long").alias("_w")]),
-                )
-                if wspec in score_tables:
-                    # stage scores are rounded to <= 6 decimals, so the
-                    # x1e6 long is lossless — selection stays integer-
-                    # exact. Inner join: docs the scorer could not score
-                    # (no n-grams) carry no signal and are excluded.
-                    expr = {
-                        "dsir": F.col("avg_logratio") * 1e6,
-                        "neg_perplexity": -F.col("perplexity") * 1e6,
-                    }[wspec]
-                    base = base.join(
-                        score_tables[wspec].select(
-                            "doc_id",
-                            F.round(expr, 0).cast("long").alias("_w")),
-                        "doc_id",
+        # curation gates (GATES), in order: each one's decision table is a
+        # first-class output, and `documents` is rebound to its survivors
+        # before the next gate — and the span/signature closures below —
+        # capture it. left-semi/anti joins: no column duplication, and AQE
+        # broadcasts the id side when it is small relative to the corpus.
+        gate_stamps: dict = {}
+        for gate in GATES:
+            prepared = gate.prepare(self.spark, cfg, documents, out)
+            if prepared is None:
+                if until == gate.name:
+                    # a stage name implies its stage ran: returning
+                    # without the gate's table would fail silently
+                    raise ValueError(
+                        f"run(until={gate.name!r}) requires cfg."
+                        f"{gate.cfg_field} (the {gate.name} gate is opt-in)"
                     )
-                return select_to_budget(
-                    base, budget=int(budget_opts_eff["budget"]),
-                    weight_col="_w", cost_col="_c",
-                )
-
-            sel = self._stage(
-                "budget", s_budget,
-                meta={"gate": "budget-prefix-sum-v1",
-                      **{k: budget_opts_eff[k]
-                         for k in ("budget", "weight", "text_col")}},
-            )
-            out["budget"] = sel
+                continue
+            compute, meta, gate_stamps[gate.stamp_key] = prepared
+            decisions = out[gate.name] = self._stage(gate.name, compute, meta=meta)
+            if gate.rows is not None:
+                decisions = decisions.filter(gate.rows)
             documents = documents.join(
-                sel.select("doc_id"), "doc_id", "left_semi"
-            )
-        if until == "budget":
-            if not cfg.enable_budget:
-                raise ValueError(
-                    "run(until='budget') requires cfg.enable_budget=True "
-                    "(the budget cut is opt-in)"
-                )
-            _join_check()
-            self.flush_metrics()
-            return out
+                decisions.select("doc_id"), "doc_id", gate.how)
+            if until == gate.name:
+                return stop()
 
         # span_pairs depends only on `documents` — launch it on a second
         # submission thread so Spark schedules it CONCURRENTLY with the
@@ -1169,54 +1012,16 @@ class NearDupPipeline:
         try:
             signatures = self._stage(
                 "signatures", lambda: compute_signatures(documents, d),
-                # the gate key is stamped only when the gate is ON: a
-                # gate-off stamp stays byte-identical to pre-gate
-                # checkpoints (their resumes keep working), while any
-                # on<->off toggle of one workdir still mismatches
+                # a gate-off run stamps no gate key (see GATES), so any
+                # on<->off toggle of one workdir mismatches
                 meta={**signature_meta(d),
                       **({"unicode_gate": {"gate": "unicode-nfc-v1"}}
                          if cfg.unicode_nfc else {}),
-                      **({"url_gate": {"gate": "url-canonical-v1"}}
-                         if cfg.enable_url_dedup else {}),
-                      **({"blocklist_gate": {"gate": "url-blocklist-suffix-v1",
-                                             "list_sha": blocklist_hash}}
-                         if cfg.blocklist_domains is not None else {}),
-                      **({"domain_cap_gate": {"gate": "domain-cap-md5-v1",
-                                              "cap": int(cfg.domain_cap_n)}}
-                         if cfg.domain_cap_n is not None else {}),
-                      **({"input_gate": {"gate": "corpus_filter-v1",
-                                         **filter_opts_eff}}
-                         if cfg.enable_filter else {}),
-                      **({"perplexity_gate": {
-                              "gate": "lm-perplexity-bigram-laplace-v1",
-                              **{k: ppl_opts_eff[k] for k in
-                                 ("ppl_min", "ppl_max", "text_col")}}}
-                         if cfg.enable_perplexity else {}),
-                      **({"dsir_gate": {
-                              "gate": "dsir-hashed-bigram-v1",
-                              **{k: dsir_opts_eff[k] for k in
-                                 ("target_path", "min_avg_logratio",
-                                  "n_buckets", "alpha", "text_col")}}}
-                         if cfg.enable_dsir else {}),
-                      **({"decontaminate_gate": {
-                              "gate": "bloom-decontaminate-v1",
-                              **{k: decon_opts_eff[k]
-                                 for k in ("benchmark_path", "k", "m_bits",
-                                           "n_hashes", "max_flagged_ratio",
-                                           "text_col")}}}
-                         if cfg.enable_decontaminate else {}),
-                      **({"sample_gate": {"gate": "stratified-md5-v1",
-                                          **sample_opts_eff}}
-                         if cfg.enable_sample else {}),
-                      **({"budget_gate": {"gate": "budget-prefix-sum-v1",
-                                          **budget_opts_eff}}
-                         if cfg.enable_budget else {})},
+                      **gate_stamps},
             )
             out["signatures"] = signatures
             if until == "signatures":
-                _join_check()
-                self.flush_metrics()
-                return out
+                return stop()
 
             candidates = self._stage(
                 "candidates",
@@ -1226,9 +1031,7 @@ class NearDupPipeline:
             )
             out["candidates"] = candidates
             if until == "candidates":
-                _join_check()
-                self.flush_metrics()
-                return out
+                return stop()
 
             # tier_report: per-pair tier attribution over the SAME
             # signature table (exact > LSH > tier-2 > SimHash) — pure
@@ -1242,17 +1045,7 @@ class NearDupPipeline:
                     lambda: candidate_tier_attribution(signatures, d),
                 )
             if until == "tier_report":
-                if not cfg.enable_tier_report:
-                    # same contract as until='filter': a stage name
-                    # implies its stage ran
-                    raise ValueError(
-                        "run(until='tier_report') requires "
-                        "cfg.enable_tier_report=True (the attribution "
-                        "pass is opt-in)"
-                    )
-                _join_check()
-                self.flush_metrics()
-                return out
+                return stop()
 
             if cfg.enable_span and span_future is None:
                 out["span_pairs"] = self._stage(
@@ -1260,9 +1053,7 @@ class NearDupPipeline:
                     lambda: winnow_span_pairs(documents, d, keep_witness=True),
                 )
             if until == "span_pairs":
-                _join_check()
-                self.flush_metrics()
-                return out
+                return stop()
 
             verified = self._stage(
                 "verified",
@@ -1283,8 +1074,7 @@ class NearDupPipeline:
                 check_pool.shutdown(wait=False)
         _join_check()
         if until == "verified":
-            self.flush_metrics()
-            return out
+            return stop()
 
         # span_report: the shared-boilerplate block deliverable — witness
         # grams of confirmed span pairs extended to maximal byte-identical
@@ -1302,24 +1092,21 @@ class NearDupPipeline:
                 lambda: span_extents(documents, d, span_pairs=sp),
             )
         if until == "span_report":
-            self.flush_metrics()
-            return out
+            return stop()
 
         # virtual stage: a pure filter of the checkpointed `verified` table;
         # recomputing on resume is free, so no checkpoint of its own
         edges = verified.filter("verified").select("a", "b")
         out["edges"] = edges
         if until == "edges":
-            self.flush_metrics()
-            return out
+            return stop()
 
         clusters = self._stage(
             "clusters", lambda: assign_clusters(documents, edges)
         )
         out["clusters"] = clusters
         if until == "clusters":
-            self.flush_metrics()
-            return out
+            return stop()
 
         def s_canonical():
             joined = documents.join(clusters, "doc_id")
@@ -1333,5 +1120,4 @@ class NearDupPipeline:
             )
 
         out["canonical"] = self._stage("canonical", s_canonical)
-        self.flush_metrics()
-        return out
+        return stop()

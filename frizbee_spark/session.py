@@ -60,6 +60,15 @@ def _malloc_retention_env() -> None:
     os.environ.setdefault("MALLOC_TOP_PAD_", str(128 << 20))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when SPARK_DRIVER_MEMORY is unset: a quarter of physical
+    memory, at least 1g and at most 16g. The heap is pre-touched whole at
+    start-up (see get_spark), so a fixed size larger than the host cannot
+    even start: the JVM fails to map it and leaves an hs_err_pid*.log."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1 << 10, min(16 << 10, (ram >> 20) // 4))}m"
+
+
 def get_spark(app_name: str = "frizbee-spark", cores: int | None = None, extra: dict | None = None):
     from pyspark.sql import SparkSession
 
@@ -83,7 +92,7 @@ def get_spark(app_name: str = "frizbee-spark", cores: int | None = None, extra: 
     # scale per node. Use the RAM-backed /dev/shm when present (standard
     # practice: put spark.local.dir on the fastest local storage).
     local_dir = choose_local_dir()
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -102,14 +111,13 @@ def get_spark(app_name: str = "frizbee-spark", cores: int | None = None, extra: 
         # copies into newly-committed regions whose pages fault in DURING
         # the pause — measured young-GC pauses of 6-18 s on this sandbox
         # with a lazily-grown heap, vs 28 ms max once fully pre-touched.
-        # The heap is right-sized to 16g (not the old 48g) so the one-time
-        # pre-touch stays ~13 s and G1 collects instead of growing;
+        # The heap is sized by default_driver_memory so the one-time
+        # pre-touch stays short and G1 collects instead of growing;
         # execution/storage overflow spills to spark.local.dir as usual.
-        # Override via SPARK_DRIVER_MEMORY / SPARK_GRAFT_XMS.
+        # Override via SPARK_DRIVER_MEMORY.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_XMS', driver_mem)} "
-            "-XX:+AlwaysPreTouch",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", split)

@@ -1492,3 +1492,121 @@ class TestBudgetDsirWeight:
                 workdir=work, enable_budget=True,
                 budget_opts={"budget": 100, "weight": "neg_perplexity"},
             )).run(docs=docs, until="budget")
+
+
+class TestGateTable:
+    """The curation gates run from one table (pipeline.GATES); the stage
+    list, the id-collision invalidation and the checkpoint stamps all
+    derive from it."""
+
+    # the stamps a gated run wrote before the gates moved into a table:
+    # equal stamps are what lets those workdirs keep resuming
+    GATE_CFG = dict(
+        enable_url_dedup=True,
+        blocklist_domains=["site0001.example", "no-such.invalid"],
+        domain_cap_n=20,
+        enable_filter=True,
+        filter_opts={"min_chars": 1, "require_lang_signal": False},
+        enable_perplexity=True,
+        perplexity_opts={"ppl_max": 1e12},
+        enable_sample=True,
+        sample_opts={"rates": {"en": 1.0, "de": 0.5, "fr": 0.0}},
+        enable_budget=True,
+        budget_opts={"budget": 3000},
+    )
+    WANT_META = {
+        "url_dedup": {"gate": "url-canonical-v1"},
+        "blocklist": {"gate": "url-blocklist-suffix-v1",
+                      "n_domains": 2, "list_sha": "099e19365f769079"},
+        "domain_cap": {"gate": "domain-cap-md5-v1", "cap": 20},
+        "filter": None,  # these two gates write no stage stamp
+        "perplexity": {"gate": "lm-perplexity-bigram-laplace-v1",
+                       "ppl_min": 0.0, "ppl_max": 1e12, "text_col": "text"},
+        "sample": None,
+        "budget": {"gate": "budget-prefix-sum-v1", "budget": 3000,
+                   "weight": "chars", "text_col": "text"},
+        "signatures": {
+            "family": "oph-rotation-densified-v1", "num_perm": 128,
+            "bands": 32, "band_rows": 4, "seed": 1, "shingle_k": 12,
+            "short_doc_max_bytes": 320, "short_bands": 64,
+            "short_band_rows": 2,
+            "url_gate": {"gate": "url-canonical-v1"},
+            "blocklist_gate": {"gate": "url-blocklist-suffix-v1",
+                               "list_sha": "099e19365f769079"},
+            "domain_cap_gate": {"gate": "domain-cap-md5-v1", "cap": 20},
+            "input_gate": {"gate": "corpus_filter-v1", "min_chars": 1,
+                           "require_lang_signal": False, "text_col": "text"},
+            "perplexity_gate": {"gate": "lm-perplexity-bigram-laplace-v1",
+                                "ppl_min": 0.0, "ppl_max": 1e12,
+                                "text_col": "text"},
+            "sample_gate": {"gate": "stratified-md5-v1",
+                            "rates": {"en": 1.0, "de": 0.5, "fr": 0.0},
+                            "stratum_col": "lang"},
+            "budget_gate": {"gate": "budget-prefix-sum-v1", "budget": 3000,
+                            "weight": "chars", "text_col": "text"},
+        },
+    }
+
+    def test_stage_list_covers_gates_and_checkpoints(self):
+        from frizbee_spark.pipeline import (
+            DEFAULT_CHECKPOINTS, GATES, STAGES)
+
+        names = [g.name for g in GATES]
+        assert list(STAGES[1:1 + len(GATES)]) == names
+        assert set(DEFAULT_CHECKPOINTS) <= set(STAGES)
+
+    def test_unknown_until_rejected(self, spark, corpus_dir,
+                                    tmp_path_factory):
+        work = str(tmp_path_factory.mktemp("work_typo"))
+        pipe = NearDupPipeline(spark, PipelineConfig(workdir=work))
+        with pytest.raises(ValueError, match="unknown stage"):
+            pipe.run(input_path=corpus_dir, until="cannonical")
+        assert os.listdir(work) == []  # rejected before any stage ran
+
+    def test_id_collision_invalidates_budget(self, spark, tmp_path_factory):
+        docs = spark.createDataFrame(
+            [(i % 5, f"document number {i} " * 8) for i in range(10)],
+            "doc_id long, text string")
+        work = str(tmp_path_factory.mktemp("work_collide"))
+        pipe = NearDupPipeline(spark, PipelineConfig(
+            workdir=work, enable_budget=True, budget_opts={"budget": 100}))
+        with pytest.raises(AssertionError, match="doc_id collision"):
+            pipe.run(docs=docs, until="signatures")
+        # every stage derived from the bad documents table is gone, the
+        # budget selection included
+        assert not os.path.exists(os.path.join(work, "budget"))
+        assert not os.path.exists(os.path.join(work, "documents"))
+
+    def test_checkpoint_stamps_pinned(self, spark, corpus_dir,
+                                      tmp_path_factory):
+        import json
+
+        from frizbee_spark.pipeline import DEFAULT_CHECKPOINTS
+
+        src = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
+        crawl = src.unionByName(
+            src.orderBy("url").limit(10)
+            .withColumn("url", F.concat(F.col("url"),
+                                        F.lit("?utm_source=recrawl")))
+            .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 HOUR"))
+        )
+        work = str(tmp_path_factory.mktemp("work_stamps"))
+        cfg = PipelineConfig(
+            workdir=work,
+            checkpoint_stages=DEFAULT_CHECKPOINTS + (
+                "url_dedup", "blocklist", "domain_cap", "filter", "sample"),
+            **self.GATE_CFG)
+        NearDupPipeline(spark, cfg).run(docs=crawl, until="signatures")
+
+        def meta(stage):
+            p = os.path.join(work, stage, "_meta.json")
+            return json.load(open(p)) if os.path.exists(p) else None
+
+        got = {st: meta(st) for st in (
+            "url_dedup", "blocklist", "domain_cap", "filter", "perplexity",
+            "sample", "budget", "signatures")}
+        assert got == self.WANT_META
+        pipe2 = NearDupPipeline(spark, cfg)
+        pipe2.run(docs=crawl, until="signatures")
+        assert any(r["stage"] == "signatures" and r["resumed"]
+                   for r in pipe2.metrics().collect())

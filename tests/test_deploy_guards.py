@@ -119,3 +119,19 @@ class TestShmElection:
         # explicit env always wins
         monkeypatch.setenv("SPARK_LOCAL_DIRS", "/x")
         assert choose_local_dir() == "/x"
+
+
+class TestDriverHeap:
+    def test_default_heap_fits_host(self, monkeypatch):
+        # the heap is pre-touched whole at JVM start, so the default must
+        # fit physical memory: a quarter of it, within 1g..16g
+        from frizbee_spark import session
+
+        page = 4096
+        for ram, want in ((15 << 30, "3840m"), (256 << 30, "16384m"),
+                          (2 << 30, "1024m")):
+            monkeypatch.setattr(
+                session.os, "sysconf",
+                lambda name, ram=ram: page if name == "SC_PAGE_SIZE"
+                else ram // page)
+            assert session.default_driver_memory() == want
