@@ -8,12 +8,20 @@ interleaved SIMD lanes play in the reference design
 (/root/reference/src/smith_waterman/simd/algorithm.rs:129-200,
  interleave/mod.rs:10-34): rows of the batch are lanes, NumPy is the SIMD.
 
-Two kernels:
+Both DP kernels are POSITION-MAJOR: operands are ``(position, lane)``
+arrays with the haystack side reversed, so every diagonal's operands are
+contiguous row slices and each ufunc runs over the whole batch at once.
 
 - :func:`sw_batch` — full (unbanded) matrices, plus a vectorized typo
   traceback. Used by the fuzzy matcher on short strings (<= 512 bytes,
-  same routing cap as the reference: src/one_shot/mod.rs:20-25). Must be
-  bit-identical to the scalar oracle (tests are differential).
+  same routing cap as the reference: src/one_shot/mod.rs:20-25). Each
+  lane carries its own needle, so the matcher scores the rows of every
+  needle in one length bucket with one call. H is stored skewed,
+  ``S[d + 2, i + 1, lane] = H(i, d - i)``, which makes the diag, up and
+  left inputs of a diagonal plain slices of the two before it; only the
+  previous diagonal's gap flags are kept, and the traceback
+  (:func:`_typos_skewed`) walks ``S`` directly. Must be bit-identical to
+  the scalar oracle (tests are differential).
 
 - :func:`sw_score_banded` — O(len * band) rolling-buffer kernel for long
   documents: only cells with |j - i| <= band_radius are computed (the
@@ -37,9 +45,8 @@ def _pad_bytes(items: list[bytes], width: int | None = None) -> tuple[np.ndarray
     lens = np.fromiter((len(b) for b in items), dtype=np.int64, count=len(items))
     w = int(lens.max()) if width is None else width
     out = np.zeros((len(items), max(w, 1)), dtype=np.uint8)
-    for k, b in enumerate(items):
-        if b:
-            out[k, : len(b)] = np.frombuffer(b, dtype=np.uint8)
+    # row-major boolean assignment fills each row's prefix in order
+    out[np.arange(out.shape[1]) < lens[:, None]] = np.frombuffer(b"".join(items), dtype=np.uint8)
     return out, lens
 
 
@@ -76,17 +83,45 @@ def _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring: Scoring):
     return delim_bonus, cap_bonus
 
 
+def _score_dtype(max_matches: int, scoring: Scoring):
+    """int16 when no cell can overflow it (halves memory traffic), else int32.
+
+    A path scores at most ``max_matches`` fully-bonused matches plus one
+    prefix bonus; penalties only ever pull a cell towards the zero clamp.
+    """
+    per_match = (scoring.match_score + scoring.matching_case_bonus
+                 + scoring.delimiter_bonus + scoring.capitalization_bonus)
+    top = (max_matches * per_match + scoring.prefix_bonus
+           + scoring.offset_prefix_bonus + scoring.exact_match_bonus)
+    penalty = max(scoring.mismatch_penalty, scoring.gap_open_penalty,
+                  scoring.gap_extend_penalty)
+    return np.int16 if top < 30000 and penalty < 2000 else np.int32
+
+
 def sw_batch(
     needles: list[bytes],
     haystacks: list[bytes],
     scoring: Scoring = DEFAULT_SCORING,
     compute_typos: bool = True,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Score a batch of pairs with full DP matrices.
+    """Score a batch of (needle, haystack) lanes with full DP matrices.
 
-    Returns ``(scores, typos, exact)`` — int64 scores (exact-match bonus
-    included), int64 typo counts (-1 when ``compute_typos`` is False),
-    bool exact flags. Semantics match the scalar oracle cell-for-cell.
+    Every lane carries its own needle, so one call can score many needles
+    against their candidate rows at once. Returns ``(scores, typos,
+    exact)`` — int64 scores (exact-match bonus included), int64 typo
+    counts (-1 when ``compute_typos`` is False), bool exact flags.
+    Semantics match the scalar oracle cell-for-cell.
+
+    Layout: operands are position-major ``(position, lane)`` with the
+    haystack side reversed, as in :func:`sw_score_banded`, and H is
+    stored skewed, ``S[d + 2, i + 1, lane] = H(i, d - i)``: the diag, up
+    and left inputs of diagonal ``d`` are then row slices of diagonals
+    ``d - 2`` and ``d - 1``. Row ``d + 2`` is written once; slot 0 and
+    every cell outside a diagonal's window stay zero, which is the
+    padding the recurrence reads at ``i = -1`` and ``j = -1``. Only the
+    previous diagonal's gap flags are kept. The typo traceback walks
+    ``S`` directly (:func:`_typos_skewed`); without it only the last
+    three diagonals are held.
     """
     assert len(needles) == len(haystacks)
     bsz = len(needles)
@@ -97,74 +132,110 @@ def sw_batch(
     ns, nlens = _pad_bytes(needles)
     hs, wlens = _pad_bytes(haystacks)
     n_max, w_max = ns.shape[1], hs.shape[1]
+    dtype = _score_dtype(min(n_max, w_max), scoring)
 
-    n_low, n_upper, _, _ = _char_classes(ns, scoring.delimiters)
+    n_low = _char_classes(ns, scoring.delimiters)[0]
     h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
     delim_bonus, cap_bonus = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
     h0_nonalpha = ~((hs[:, 0] >= 65) & (hs[:, 0] <= 90)) & ~((hs[:, 0] >= 97) & (hs[:, 0] <= 122))
     h0_nonalpha &= wlens > 0
 
-    # padded (+1 row/col of zeros) so i-1 / j-1 reads need no branching
-    H = np.zeros((bsz, n_max + 1, w_max + 1), dtype=np.int32)
-    U = np.zeros((bsz, n_max + 1, w_max + 1), dtype=bool)  # gap-open flag, up
-    L = np.zeros((bsz, n_max + 1, w_max + 1), dtype=bool)  # gap-open flag, left
-    U[:, :, 0] = True
-    L[:, :, 0] = True
+    # position-major operands; haystack rows reversed so a diagonal's
+    # haystack positions are a plain row range: rev[t] == orig[w_max-1-t].
+    # On a case-folded match the matching-case bonus fires exactly when
+    # the raw bytes are equal, so it needs one compare of the raw bytes.
+    n_low_T = np.ascontiguousarray(n_low.T)
+    n_raw_T = np.ascontiguousarray(ns.T)
+    n_valid_T = np.arange(n_max)[:, None] < nlens[None, :]
+    h_low_rev_T = np.ascontiguousarray(h_low.T[::-1])
+    h_raw_rev_T = np.ascontiguousarray(hs.T[::-1])
+    h_valid_rev_T = np.arange(w_max - 1, -1, -1)[:, None] < wlens[None, :]
+    static_rev_T = np.ascontiguousarray(
+        (delim_bonus + cap_bonus + scoring.match_score).T[::-1]).astype(dtype)
 
-    best = np.zeros(bsz, dtype=np.int32)
-    go, ge = scoring.gap_open_penalty, scoring.gap_extend_penalty
+    rows = n_max + w_max + 1 if compute_typos else 3
+    slots = n_max + 1
+    S = np.zeros((rows, slots, bsz), dtype=dtype)
+    # gap-open flags of the previous diagonal, by slot. Both are read from
+    # the up neighbour (i, j-1), i.e. the same slot the cell writes, so
+    # they are updated in place; slots above the written window are
+    # still True, the fresh-column state of the scalar recurrence
+    u_open = np.ones((slots, bsz), dtype=bool)
+    l_open = np.ones((slots, bsz), dtype=bool)
+
+    bw = min(n_max, w_max)
+    sc = {k: np.empty((bw, bsz), dtype=dtype) for k in ("d1", "d2", "pen", "u", "l")}
+    sc.update({k: np.empty((bw, bsz), dtype=bool) for k in ("m", "dt", "v")})
+    best = np.zeros(bsz, dtype=dtype)
+    go_minus_ge = dtype(scoring.gap_open_penalty - scoring.gap_extend_penalty)
+    ge, mismatch, zero = (dtype(scoring.gap_extend_penalty),
+                          dtype(scoring.mismatch_penalty), dtype(0))
+    mcb = dtype(scoring.matching_case_bonus)
+    min_n, min_w = int(nlens.min()), int(wlens.min())
 
     for d in range(n_max + w_max - 1):
-        i_lo = max(0, d - w_max + 1)
-        i_hi = min(n_max - 1, d)
-        iv = np.arange(i_lo, i_hi + 1)
-        jv = d - iv
+        i_lo, i_hi = max(0, d - w_max + 1), min(n_max - 1, d)
+        wd = i_hi - i_lo + 1
+        r_lo = w_max - 1 - d + i_lo  # reversed haystack row of i_lo
+        r_hi = r_lo + wd
+        lo, hi = i_lo + 1, i_hi + 2  # slots written on this diagonal
+        diag_in = S[d % rows, i_lo:i_hi + 1]
+        left_in = S[(d + 1) % rows, i_lo:i_hi + 1]
+        up_in = S[(d + 1) % rows, lo:hi]
+        u_f, l_f = u_open[lo:hi], l_open[lo:hi]
 
-        valid = (iv[None, :] < nlens[:, None]) & (jv[None, :] < wlens[:, None])
-        if not valid.any():
-            continue
+        # diagonal move: max(diag - mismatch, 0), or diag + bonus on a match
+        d1 = np.subtract(diag_in, mismatch, out=sc["d1"][:wd])
+        np.maximum(d1, zero, out=d1)
+        d2 = np.add(diag_in, static_rev_T[r_lo:r_hi], out=sc["d2"][:wd])
+        case_eq = np.equal(n_raw_T[i_lo:i_hi + 1], h_raw_rev_T[r_lo:r_hi],
+                           out=sc["m"][:wd])
+        np.add(d2, mcb, out=d2, where=case_eq)
+        # prefix / offset-prefix patches hit at most the last two cells
+        # (j == 0 at i == d, j == 1 at i == d - 1)
+        if i_hi == d:
+            d2[-1] += scoring.prefix_bonus
+        if i_lo <= d - 1 <= i_hi:
+            # offset-prefix needs H(i-1, 0) == 0 — that cell is diag_in —
+            # and a non-alphabetic first haystack char (algorithm.rs:33-34)
+            t = d - 1 - i_lo
+            d2[t] += np.where((diag_in[t] == 0) & h0_nonalpha,
+                              scoring.offset_prefix_bonus, 0).astype(dtype)
+        is_match = np.equal(n_low_T[i_lo:i_hi + 1], h_low_rev_T[r_lo:r_hi],
+                            out=sc["m"][:wd])
+        np.copyto(d1, d2, where=is_match)
 
-        is_match = n_low[:, iv] == h_low[:, jv]
-        case_eq = n_upper[:, iv] == h_upper[:, jv]
+        # gap moves: penalty = ge + open_flag * (go - ge)
+        pen = np.multiply(u_f, go_minus_ge, out=sc["pen"][:wd], casting="unsafe")
+        pen += ge
+        up = np.subtract(up_in, pen, out=sc["u"][:wd])
+        np.maximum(up, zero, out=up)
+        np.multiply(l_f, go_minus_ge, out=pen, casting="unsafe")
+        pen += ge
+        left = np.subtract(left_in, pen, out=sc["l"][:wd])
+        np.maximum(left, zero, out=left)
 
-        # match score with prefix / offset-prefix bonuses
-        mscore = np.full((bsz, iv.size), scoring.match_score, dtype=np.int32)
-        pref = jv == 0
-        if pref.any():
-            mscore[:, pref] += scoring.prefix_bonus
-        offp = jv == 1
-        if offp.any():
-            # offset-prefix requires prev column's first cell == 0 and a
-            # non-alphabetic first haystack char (algorithm.rs:33-34)
-            col0_prev = H[:, iv[offp], 1]  # real cell (i-1, 0)
-            mscore[:, offp] += np.where(
-                (col0_prev == 0) & h0_nonalpha[:, None], scoring.offset_prefix_bonus, 0
-            )
+        # with the three-row ring, the two slots just outside this window
+        # may hold an older diagonal; later diagonals read them as zeros
+        row = S[(d + 2) % rows]
+        row[lo - 1] = 0
+        if hi < slots:
+            row[hi] = 0
+        maxv = row[lo:hi]
+        np.maximum(d1, up, out=maxv)
+        np.maximum(maxv, left, out=maxv)
+        # cells past either string's real length are zero; skip the mask
+        # when the window is interior to every lane
+        if not (i_hi < min_n and d - i_lo < min_w):
+            maxv *= np.logical_and(n_valid_T[i_lo:i_hi + 1], h_valid_rev_T[r_lo:r_hi],
+                                   out=sc["v"][:wd])
 
-        diag_in = H[:, iv, jv]          # real (i-1, j-1)
-        left_in = H[:, iv, jv + 1]      # real (i-1, j)
-        up_in = H[:, iv + 1, jv]        # real (i,   j-1)
-        u_open = U[:, iv + 1, jv]
-        l_open = L[:, iv + 1, jv]
-
-        diag_score = np.where(
-            is_match,
-            diag_in + mscore + delim_bonus[:, jv] + cap_bonus[:, jv]
-            + np.where(case_eq, scoring.matching_case_bonus, 0),
-            np.maximum(diag_in - scoring.mismatch_penalty, 0),
-        )
-        up_score = np.maximum(up_in - np.where(u_open, go, ge), 0)
-        left_score = np.maximum(left_in - np.where(l_open, go, ge), 0)
-
-        maxv = np.maximum(diag_score, np.maximum(up_score, left_score))
-        maxv = np.where(valid, maxv, 0)
-
-        diag_taken = maxv == diag_score
-        H[:, iv + 1, jv + 1] = maxv
-        U[:, iv + 1, jv + 1] = (maxv != up_score) | diag_taken
-        L[:, iv + 1, jv + 1] = (maxv != left_score) | diag_taken
-
-        best = np.maximum(best, maxv.max(axis=1))
+        diag_taken = np.equal(maxv, d1, out=sc["dt"][:wd])
+        np.not_equal(maxv, up, out=u_f)
+        u_f |= diag_taken
+        np.not_equal(maxv, left, out=l_f)
+        l_f |= diag_taken
+        np.maximum(best, maxv.max(axis=0), out=best)
 
     exact = (nlens == wlens) & np.array(
         [needles[k] == haystacks[k] for k in range(bsz)], dtype=bool
@@ -173,67 +244,60 @@ def sw_batch(
     scores[exact] += scoring.exact_match_bonus
 
     if compute_typos:
-        typos = _typos_batch(H, nlens, wlens)
+        typos = _typos_skewed(S, nlens, wlens)
     else:
         typos = np.full(bsz, -1, dtype=np.int64)
     return scores, typos, exact
 
 
-def _typos_batch(H: np.ndarray, nlens: np.ndarray, wlens: np.ndarray) -> np.ndarray:
-    """Vectorized typo traceback over the whole batch at once.
+def _typos_skewed(S: np.ndarray, nlens: np.ndarray, wlens: np.ndarray) -> np.ndarray:
+    """Vectorized typo traceback over skewed score matrices.
 
-    All pairs walk their matrices back simultaneously; each step is a set
-    of batched gathers. Tie-break order (diag >= left >= up) and the
+    ``S[i + j + 2, i + 1, lane] = H(i, j)`` with zeros at ``i = -1``,
+    ``j = -1`` and past each lane's lengths (the layout of
+    :func:`sw_batch`). All lanes walk back at once, one batched gather
+    per neighbour per step. Tie-break order (diag >= left >= up) and the
     terminal col-0 zero-score compensation replicate the scalar oracle
     (reference/typos.rs:22-59) exactly — recall parity depends on it.
-    ``H`` is the padded (+1) matrix from :func:`sw_batch`.
     """
-    bsz = H.shape[0]
+    rows, slots, bsz = S.shape
+    w_max = rows - slots
     typos = np.zeros(bsz, dtype=np.int64)
     if bsz == 0:
         return typos
 
-    bidx = np.arange(bsz)
-    col = nlens - 1  # real needle-column index
-    # start row: first argmax of the last real needle column, restricted
-    # to real haystack cells (padded cells are 0 and never beat a positive
-    # score; all-zero rows argmax to 0 like the scalar scan)
-    last_col = H[bidx, col + 1, 1:]
-    row = last_col.argmax(axis=1)
-    score = last_col[bidx, row]
-    row = row.astype(np.int64)
+    # start: first argmax over the last real needle column, gathered per
+    # needle length as a strided slice (padded cells are 0 and never beat
+    # a positive score; all-zero columns argmax to 0 like the scalar scan)
+    col = nlens.astype(np.int64) - 1
+    row = np.zeros(bsz, dtype=np.int64)
+    score = np.zeros(bsz, dtype=np.int64)
+    for c in np.unique(col[col >= 0]):
+        lanes = np.flatnonzero(col == c)
+        last = S[c + 2:c + 2 + w_max, c + 1][:, lanes]
+        row[lanes] = last.argmax(axis=0)
+        score[lanes] = last[row[lanes], np.arange(lanes.size)]
 
-    empty_h = wlens == 0
-    row[empty_h] = 0
-    score[empty_h] = 0
-
-    active = col > 0
-    while active.any():
-        at_row0 = active & (row == 0)
-        typos[at_row0] += 1
-        col[at_row0] -= 1
-
-        rest = active & ~at_row0
-        if rest.any():
-            b = bidx[rest]
-            c = col[rest]
-            r = row[rest]
-            diag = H[b, c, r]          # real (c-1, r-1)
-            left = H[b, c, r + 1]      # real (c-1, r)
-            up = H[b, c + 1, r]        # real (c,   r-1)
-
-            take_diag = (diag >= left) & (diag >= up)
-            take_left = ~take_diag & (left >= up)
-            take_up = ~take_diag & ~take_left
-
-            typos[b] += np.where(
-                take_diag & (diag >= score[rest]), 1, np.where(take_left, 1, 0)
-            )
-            col[b] = c - np.where(take_diag | take_left, 1, 0)
-            row[b] = r - np.where(take_diag | take_up, 1, 0)
-            score[b] = np.where(take_diag, diag, np.where(take_left, left, up))
-
-        active = col > 0
+    flat = S.reshape(-1)
+    step_d, step_s = slots * bsz, bsz
+    while True:
+        b = np.flatnonzero(col > 0)
+        if not b.size:
+            break
+        c, r, sc = col[b], row[b], score[b]
+        at_row0 = r == 0
+        at = (c + r) * step_d + c * step_s + b  # H(c-1, r-1)
+        diag = flat[at]
+        left = flat[at + step_d]           # H(c-1, r)
+        up = flat[at + step_d + step_s]    # H(c, r-1)
+        take_diag = ~at_row0 & (diag >= left) & (diag >= up)
+        take_left = ~at_row0 & ~take_diag & (left >= up)
+        # at row 0 the scalar walk steps left for one typo, score kept
+        typos[b] += at_row0 | take_left | (take_diag & (diag >= sc))
+        col[b] = c - (at_row0 | take_diag | take_left)
+        row[b] = r - (~at_row0 & ~take_left)
+        score[b] = np.where(at_row0, sc,
+                            np.where(take_diag, diag, np.where(take_left, left, up)))
 
     typos[(col == 0) & (score == 0)] += 1
     return typos
@@ -278,12 +342,8 @@ def sw_score_banded(
     n_low, n_upper, _, _ = _char_classes(ns, scoring.delimiters)
     h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
     delim_bonus, cap_bonus = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
-    # int16 is safe while the best possible score fits comfortably
-    max_possible = int(min(nlens.max(), wlens.max())) * (
-        scoring.match_score + scoring.matching_case_bonus
-        + scoring.delimiter_bonus + scoring.capitalization_bonus
-    ) + scoring.prefix_bonus + scoring.exact_match_bonus
-    dtype = np.int16 if (assume_folded and max_possible < 30000) else np.int32
+    dtype = (_score_dtype(int(min(nlens.max(), wlens.max())), scoring)
+             if assume_folded else np.int32)
     # static on-match bonus per haystack position (path-independent);
     # with folded input the matching-case bonus always fires -> fold it in
     static_bonus = (

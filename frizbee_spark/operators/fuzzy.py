@@ -13,8 +13,9 @@ Distributed operator:
     threads: src/one_shot/parallel/mod.rs:19-46).
 
 Pipeline stages inside a batch (mirrors matcher.rs:91-144): min-length
-filter -> vectorized char-count prefilter -> greedy routing for oversized
-strings -> length-bucket ladder -> batched wavefront DP -> typo filter.
+filter -> char-count prefilter over a per-batch byte histogram -> greedy
+routing for oversized strings -> length-bucket ladder -> batched
+wavefront DP, one call per bucket across all needles -> typo filter.
 The char-count prefilter is *tighter* than the reference's unordered SIMD
 prefilter (no false negatives w.r.t. the typo budget: an absent needle
 char always costs at least one typo), so post-DP results are identical.
@@ -55,30 +56,138 @@ class MatchIndices:
     exact: bool
 
 
-def _fold(arr: np.ndarray) -> np.ndarray:
-    return np.where((arr >= 65) & (arr <= 90), arr + 32, arr)
+# S-buffer cells (skewed score matrix, see wavefront.sw_batch) one DP
+# call may hold: joint calls over many needles are split to stay under it
+DP_MAX_CELLS = 8 * 1024 * 1024
 
 
-def _char_count_prefilter(
-    padded: np.ndarray, lens: np.ndarray, needle: bytes, max_typos: int
-) -> np.ndarray:
+def byte_histograms(texts: list[bytes]) -> np.ndarray:
+    """Case-folded byte counts per text, position-major ``(256, B)``.
+
+    Built once per batch and shared by every needle's prefilter; stored
+    in the smallest unsigned dtype that holds the largest count.
+    """
+    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
+    buf = np.frombuffer(b"".join(texts), dtype=np.uint8)
+    folded = np.where((buf >= 65) & (buf <= 90), buf + 32, buf).astype(np.int64)
+    owner = np.repeat(np.arange(len(texts)), lens)
+    hist = np.bincount(folded * len(texts) + owner, minlength=256 * len(texts))
+    hist = hist.reshape(256, len(texts))
+    return hist.astype(np.min_scalar_type(int(hist.max()) if hist.size else 0))
+
+
+def _char_count_prefilter(hist: np.ndarray, needle: bytes, max_typos: int) -> np.ndarray:
     """keep[b] = haystack b may match within the typo budget.
 
     Case-insensitive multiset containment: every needle char the haystack
-    lacks costs at least one typo. Plays the role of the reference's
-    unordered prefilter (src/prefilter/simd/*/unordered*.rs) — a cheap
-    may-match test with false positives, zero false negatives.
+    lacks costs at least one typo, so ``missing = sum_c max(need_c -
+    have_c, 0)`` over the needle's folded chars. Plays the role of the
+    reference's unordered prefilter (src/prefilter/simd/*/unordered*.rs)
+    — a cheap may-match test with false positives, zero false negatives.
+    ``hist`` comes from :func:`byte_histograms`.
     """
-    nb = _fold(np.frombuffer(needle, dtype=np.uint8))
-    folded = _fold(padded)
-    # mask padding with a value outside the byte alphabet
-    folded = np.where(np.arange(padded.shape[1])[None, :] < lens[:, None], folded, 256)
-    uniq, need = np.unique(nb, return_counts=True)
-    missing = np.zeros(padded.shape[0], dtype=np.int64)
-    for c, n_needed in zip(uniq, need):
-        have = (folded == c).sum(axis=1)
-        missing += np.maximum(n_needed - have, 0)
-    return missing <= max_typos
+    nb = np.frombuffer(needle, dtype=np.uint8)
+    uniq, need = np.unique(np.where((nb >= 65) & (nb <= 90), nb + 32, nb),
+                           return_counts=True)
+    short = need[:, None] - hist[uniq].astype(np.int64)
+    return np.maximum(short, 0).sum(axis=0) <= max_typos
+
+
+def match_needles(
+    needles: list[str | bytes],
+    texts: list[bytes],
+    config: MatchConfig = DEFAULT_CONFIG,
+    route: str = "auto",
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Core batch matcher for many needles over one batch of texts.
+
+    Returns flat arrays ``(needle_idx, positions, scores, typos, exact)``
+    grouped by needle in input order, positions ascending within a
+    needle; each needle's slice equals what it would get alone.
+    ``positions`` index into ``texts``; rows failing the min-length
+    filter, prefilter, or typo budget are dropped (unless max_typos is
+    None, which scores everything; an empty needle keeps every row at
+    score 0). No sorting by score here — callers sort.
+
+    ``route`` overrides the cost-based kernel choice (reference:
+    src/one_shot/mod.rs:20-25): "auto" sizes per row, "greedy" forces the
+    linear-scan matcher, "dp" forces the DP wavefront. The DP rows of
+    ALL needles that land in one length bucket are scored by one
+    ``sw_batch`` call (split to stay under ``DP_MAX_CELLS``), so the
+    interpreted per-diagonal work is paid once per bucket, not once per
+    needle.
+    """
+    nbs = [n.encode() if isinstance(n, str) else bytes(n) for n in needles]
+    count = len(texts)
+    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=count)
+    max_typos = config.max_typos
+    hist = None
+    if max_typos is not None and config.prefilter and count:
+        hist = byte_histograms(texts)
+
+    # candidate rows per needle: min-length filter (matcher.rs:84-95) and
+    # the char-count prefilter; an empty needle keeps every row unscored
+    kept = []
+    for nb in nbs:
+        if max_typos is None or not nb:
+            kept.append(np.arange(count))
+            continue
+        keep = lens >= max(0, len(nb) - max_typos)
+        if hist is not None and keep.any():
+            keep &= _char_count_prefilter(hist, nb, max_typos)
+        kept.append(np.flatnonzero(keep))
+    sizes = np.fromiter((k.size for k in kept), dtype=np.int64, count=len(kept))
+    needle_idx = np.repeat(np.arange(len(nbs)), sizes)
+    pos = np.concatenate(kept) if kept else np.zeros(0, dtype=np.int64)
+    scores = np.zeros(pos.size, dtype=np.int64)
+    typos = np.zeros(pos.size, dtype=np.int64)
+    exact = np.zeros(pos.size, dtype=bool)
+    nlen = np.fromiter((len(nb) for nb in nbs), dtype=np.int64, count=len(nbs))[needle_idx]
+    scored = nlen > 0
+
+    # cost-based routing: oversized matrices go to the greedy matcher
+    # (one_shot/mod.rs:20-25), everything else into the bucket ladder
+    kept_lens = lens[pos]
+    if route == "greedy":
+        greedy_mask = scored.copy()
+    elif route == "dp":
+        greedy_mask = np.zeros(pos.size, dtype=bool)
+    else:
+        greedy_mask = scored & ((nlen * kept_lens > SW_MAX_CELLS)
+                                | (kept_lens > LENGTH_BUCKETS[-1]))
+    g_rows = np.flatnonzero(greedy_mask)
+    for k in np.unique(needle_idx[g_rows]):
+        # batched NumPy greedy (differentially tested vs oracle.match_greedy)
+        rows = g_rows[needle_idx[g_rows] == k]
+        scores[rows], exact[rows] = greedy_batch(
+            nbs[k], [texts[p] for p in pos[rows]], config.scoring)
+
+    dp_rows = np.flatnonzero(scored & ~greedy_mask)
+    if dp_rows.size:
+        # length-bucket ladder (matcher.rs:115-132): one call per bucket
+        # across all needles, lanes sorted by needle length so a chunk
+        # pads its needles little
+        bucket_of = np.searchsorted(np.array(LENGTH_BUCKETS), kept_lens[dp_rows])
+        for bkt in np.unique(bucket_of):
+            rows = dp_rows[bucket_of == bkt]
+            rows = rows[np.argsort(nlen[rows], kind="stable")]
+            n_max, w_max = int(nlen[rows[-1]]), int(kept_lens[rows].max())
+            lane_cells = ((n_max + w_max + 1) if max_typos is not None else 3) * (n_max + 1)
+            step = max(1, DP_MAX_CELLS // lane_cells)
+            for c in range(0, rows.size, step):
+                chunk = rows[c:c + step]
+                scores[chunk], typos[chunk], exact[chunk] = sw_batch(
+                    [nbs[k] for k in needle_idx[chunk]], [texts[p] for p in pos[chunk]],
+                    config.scoring, compute_typos=max_typos is not None,
+                )
+
+    if max_typos is not None:
+        # greedy-routed and unscored rows bypass the typo filter, as in the
+        # reference (matcher.rs:104-112 appends greedy matches unconditionally)
+        ok = (typos <= max_typos) | greedy_mask | ~scored
+        needle_idx, pos, scores, typos, exact = (
+            needle_idx[ok], pos[ok], scores[ok], typos[ok], exact[ok])
+    return needle_idx, pos, scores, typos, exact
 
 
 def match_list_arrays(
@@ -87,87 +196,9 @@ def match_list_arrays(
     config: MatchConfig = DEFAULT_CONFIG,
     route: str = "auto",
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Core batch matcher: returns (kept_positions, scores, typos, exact).
-
-    ``kept_positions`` indexes into ``texts``; rows failing the min-length
-    filter, prefilter, or typo budget are dropped (unless max_typos is
-    None, which scores everything). No sorting here — callers sort.
-
-    ``route`` overrides the cost-based kernel choice (reference:
-    src/one_shot/mod.rs:20-25): "auto" sizes per row, "greedy" forces the
-    linear-scan matcher, "dp" forces the DP wavefront.
-    """
-    nb = needle.encode() if isinstance(needle, str) else bytes(needle)
-    count = len(texts)
-    if count == 0 or len(nb) == 0:
-        pos = np.arange(count)
-        z = np.zeros(count, dtype=np.int64)
-        return pos, z, z.copy(), np.zeros(count, dtype=bool)
-
-    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=count)
-    keep = np.ones(count, dtype=bool)
-
-    if config.max_typos is not None:
-        # impossible-candidate pruning (matcher.rs:84-95)
-        keep &= lens >= max(0, len(nb) - config.max_typos)
-        if config.prefilter and keep.any():
-            w = int(lens[keep].max()) if keep.any() else 1
-            padded = np.zeros((count, max(w, 1)), dtype=np.uint8)
-            for k in np.flatnonzero(keep):
-                t = texts[k]
-                padded[k, : min(len(t), w)] = np.frombuffer(t[:w], dtype=np.uint8)
-            keep_idx = np.flatnonzero(keep)
-            ok = _char_count_prefilter(padded[keep_idx], lens[keep_idx], nb, config.max_typos)
-            keep[keep_idx] = ok
-
-    pos = np.flatnonzero(keep)
-    scores = np.zeros(pos.size, dtype=np.int64)
-    typos = np.zeros(pos.size, dtype=np.int64)
-    exact = np.zeros(pos.size, dtype=bool)
-
-    # cost-based routing: oversized matrices go to the greedy matcher
-    # (one_shot/mod.rs:20-25), everything else into the bucket ladder
-    if route == "greedy":
-        greedy_mask = np.ones(pos.size, dtype=bool)
-    elif route == "dp":
-        greedy_mask = np.zeros(pos.size, dtype=bool)
-    else:
-        kept_lens = lens[pos]
-        greedy_mask = (len(nb) * kept_lens > SW_MAX_CELLS) | (
-            kept_lens > LENGTH_BUCKETS[-1]
-        )
-    g_rows = np.flatnonzero(greedy_mask)
-    if g_rows.size:
-        # batched NumPy greedy (differentially tested vs oracle.match_greedy)
-        g_scores, g_exact = greedy_batch(
-            nb, [texts[pos[k]] for k in g_rows], config.scoring
-        )
-        scores[g_rows], typos[g_rows], exact[g_rows] = g_scores, 0, g_exact
-
-    dp_rows = np.flatnonzero(~greedy_mask)
-    if dp_rows.size:
-        dp_lens = lens[pos[dp_rows]]
-        # length-bucket ladder (matcher.rs:115-132): batch same-width
-        # strings together to minimize wasted wavefront work
-        ladder = np.array(LENGTH_BUCKETS)
-        bucket_of = np.searchsorted(ladder, dp_lens)
-        for bkt in np.unique(bucket_of):
-            rows = dp_rows[bucket_of == bkt]
-            batch_texts = [texts[pos[r]] for r in rows]
-            s, t, e = sw_batch(
-                [nb] * len(batch_texts), batch_texts, config.scoring,
-                compute_typos=config.max_typos is not None,
-            )
-            scores[rows], typos[rows], exact[rows] = s, t, e
-
-    if config.max_typos is not None:
-        ok = typos <= config.max_typos
-        # greedy-routed rows bypass the typo filter, as in the reference
-        # (matcher.rs:104-112 appends greedy matches unconditionally)
-        ok |= greedy_mask
-        pos, scores, typos, exact = pos[ok], scores[ok], typos[ok], exact[ok]
-
-    return pos, scores, typos, exact
+    """One-needle :func:`match_needles`: ``(kept_positions, scores, typos,
+    exact)``."""
+    return match_needles([needle], texts, config, route)[1:]
 
 
 def match_list(
@@ -339,6 +370,7 @@ class IncrementalMatcher:
         self._lens = np.fromiter((len(t) for t in self._texts), dtype=np.int64,
                                  count=len(self._texts))
         self.stats = {"columns_computed": 0, "needles": 0}
+        self._hist = byte_histograms(self._texts) if self._texts else None
 
         ladder = np.array(LENGTH_BUCKETS)
         self._buckets: list[_IncrementalBucket] = []
@@ -354,7 +386,7 @@ class IncrementalMatcher:
         self._greedy_rows = np.flatnonzero(self._lens > LENGTH_BUCKETS[-1])
 
     def match_needle(self, needle: str | bytes) -> list[Match]:
-        from ..functions.wavefront import _typos_batch, greedy_batch
+        from ..functions.wavefront import _typos_skewed
 
         nb = needle.encode() if isinstance(needle, str) else bytes(needle)
         cfg = self.config
@@ -386,12 +418,14 @@ class IncrementalMatcher:
             exact[rows] = ex
             scores[rows] += np.where(ex, cfg.scoring.exact_match_bonus, 0)
             if cfg.max_typos is not None:
+                # skew the cached columns into sw_batch's layout:
+                # S[i + j + 2, i + 1] = H(i, j)
                 W, B = bkt.h_low_T.shape
-                H = np.zeros((B, n + 1, W + 1), dtype=np.int32)
+                S = np.zeros((n + W + 1, n + 1, B), dtype=np.int32)
                 for i, col in enumerate(bkt.columns):
-                    H[:, i + 1, 1:] = col.T
-                typos[rows] = _typos_batch(
-                    H, np.full(B, n, dtype=np.int64), bkt.lens
+                    S[i + 2:i + 2 + W, i + 1] = col
+                typos[rows] = _typos_skewed(
+                    S, np.full(B, n, dtype=np.int64), bkt.lens
                 )
 
         g_rows = np.flatnonzero(is_greedy)
@@ -405,16 +439,7 @@ class IncrementalMatcher:
         if cfg.max_typos is not None:
             keep &= self._lens >= max(0, n - cfg.max_typos)
             if cfg.prefilter and keep.any():
-                w = int(self._lens[keep].max()) if keep.any() else 1
-                padded = np.zeros((count, max(w, 1)), dtype=np.uint8)
-                for k in np.flatnonzero(keep):
-                    t = self._texts[k]
-                    padded[k, : min(len(t), w)] = np.frombuffer(t[:w], dtype=np.uint8)
-                keep_idx = np.flatnonzero(keep)
-                ok = _char_count_prefilter(
-                    padded[keep_idx], self._lens[keep_idx], nb, cfg.max_typos
-                )
-                keep[keep_idx] = ok
+                keep &= _char_count_prefilter(self._hist, nb, cfg.max_typos)
             # typo budget (greedy rows bypass it, as in match_list_arrays)
             keep &= (typos <= cfg.max_typos) | is_greedy
 
@@ -521,10 +546,11 @@ def fuzzy_join(
     (driver-held, capped at ``max_needles`` — a fuzzy join's needle side
     is a dictionary, not a second corpus; for corpus-vs-corpus use the
     dedup pipeline), and the haystack is scanned exactly ONCE: each
-    Arrow batch runs the batched SW kernel once per needle, so the cost
-    is O(|needles| * corpus) kernel work with zero extra scans or
-    shuffles. The per-needle prefilter (reference F3-F6) prunes
-    non-candidates before any DP.
+    Arrow batch goes through :func:`match_needles`, which prefilters
+    every needle against one byte histogram of the batch and scores the
+    survivors of all needles per length bucket in one DP call, so the
+    cost is O(|needles| * corpus) kernel work with zero extra scans or
+    shuffles.
 
     Catalyst pushdown: with a typo budget, docs shorter than
     min(len(needle) - max_typos) over the needle set can match nothing —
@@ -582,27 +608,24 @@ def fuzzy_join(
         for f in work.schema.fields if f.name != text_col
     )
     schema = f"needle_id long, {out_fields}, score long, typos long, exact boolean"
+    needle_ids = np.array([int(nid) for nid, _ in pairs], dtype=np.int64)
+    needle_strs = [ns for _, ns in pairs]
 
     def run(batches):
-        import pandas as pd
-
         for pdf in batches:
             texts = [
                 t.encode("utf-8", "surrogatepass") if isinstance(t, str) else (t or b"")
                 for t in pdf[text_col].tolist()
             ]
-            outs = []
-            for nid, ns in pairs:
-                pos, scores, typos, exact = match_list_arrays(
-                    ns, texts, cfg, route=route
-                )
-                out = pdf.iloc[pos].drop(columns=[text_col]).reset_index(drop=True)
-                out.insert(0, "needle_id", int(nid))
-                out["score"] = scores
-                out["typos"] = typos
-                out["exact"] = exact
-                outs.append(out)
-            yield pd.concat(outs, ignore_index=True)
+            k, pos, scores, typos, exact = match_needles(
+                needle_strs, texts, cfg, route=route
+            )
+            out = pdf.iloc[pos].drop(columns=[text_col]).reset_index(drop=True)
+            out.insert(0, "needle_id", needle_ids[k])
+            out["score"] = scores
+            out["typos"] = typos
+            out["exact"] = exact
+            yield out
 
     result = work.mapInPandas(run, schema=schema)
     if per_needle_limit is not None:

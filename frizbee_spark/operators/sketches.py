@@ -154,20 +154,17 @@ def cm_sketch(
         raise ValueError(f"width must be >= 16, got {width}")
     w = (F.col(weight_col).cast("long") if weight_col
          else F.lit(1).cast("long"))
-    rows = []
-    for r in range(depth):
-        cell = (F.conv(F.substring(F.md5(
+    # all depth cell addresses in one projection, exploded: one input scan
+    cells = F.array(*[
+        F.struct(F.lit(r).cast("long").alias("row"), (F.conv(F.substring(F.md5(
             F.concat(F.lit(f"cm{r}:"), F.col(col).cast("string"))),
-            1, 15), 16, 10).cast("long") % width)
-        rows.append(
-            df.filter(F.col(col).isNotNull())
-            .select(F.lit(r).cast("long").alias("row"),
-                    cell.alias("cell"), w.alias("w"))
-        )
-    un = rows[0]
-    for x in rows[1:]:
-        un = un.unionByName(x)
-    return (un.groupBy("row", "cell").agg(F.sum("w").alias("cnt")))
+            1, 15), 16, 10).cast("long") % width).alias("cell"))
+        for r in range(depth)])
+    return (
+        df.filter(F.col(col).isNotNull())
+        .select(F.inline(cells), w.alias("w"))
+        .groupBy("row", "cell").agg(F.sum("w").alias("cnt"))
+    )
 
 
 def cm_estimate(

@@ -468,25 +468,36 @@ def url_blocklist(
 
     Scale: suffix matching is deliberately NOT a LIKE/endswith theta
     join (quadratic: corpus x list). Each host explodes into its <= ~6
-    dot-suffixes and EQUI-joins the blocklist — broadcast when the list
-    fits (a 4M-domain UT1 list is ~100 MB serialized: raise
-    ``autoBroadcastJoinThreshold`` or let it shuffle on the domain key,
-    which the equi-join form keeps available). Only matched rows reach
-    the per-doc aggregate; unparseable hosts never enter the join.
+    dot-suffixes and EQUI-joins the blocklist, broadcast when it fits
+    ``autoBroadcastJoinThreshold`` and shuffled on the domain key when it
+    does not (a 4M-domain UT1 list is ~100 MB serialized). A DataFrame
+    blocklist's strategy is left to the planner's statistics. Only
+    matched rows reach the per-doc aggregate; unparseable hosts never
+    enter the join.
 
     ``blocked_domains``: a Python list/tuple of domains, or a DataFrame
-    with a 'domain' column. Matching is case-insensitive (hosts are
-    already lowercased by ``host_of``; list entries are lowered here).
+    with a 'domain' column; either must be non-empty. Entries are
+    lowered and stripped of leading/trailing dots ('BadNet.org.' blocks
+    'badnet.org'); hosts are already lowercased by ``host_of``.
     """
     spark = df.sparkSession
     if isinstance(blocked_domains, DataFrame):
-        bl = blocked_domains.select(
-            F.lower(F.col("domain")).alias("domain")).distinct()
+        # same normalization as the list branch: lowered, outer dots off
+        bl = blocked_domains.select(F.regexp_replace(
+            F.lower(F.col("domain")), r"^\.+|\.+$", "").alias("domain")
+        ).filter(F.col("domain").isNotNull()).distinct()
+        if bl.isEmpty():
+            raise ValueError("url_blocklist needs a non-empty blocklist")
     else:
         doms = sorted({str(d).lower().strip(".") for d in blocked_domains})
         if not doms:
             raise ValueError("url_blocklist needs a non-empty blocklist")
         bl = spark.createDataFrame([(d,) for d in doms], "domain string")
+        # a Python-list blocklist has no plan statistics: broadcast it while
+        # it fits the session threshold, else keep the shuffle join
+        limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if sum(map(len, doms)) <= limit:
+            bl = F.broadcast(bl)
     hosts = (
         df.select(F.col(id_col).alias("doc_id"),
                   host_of(url_col).alias("host"))
@@ -495,7 +506,7 @@ def url_blocklist(
     sfx = hosts.select(
         "doc_id", "host", F.explode(host_suffixes("host")).alias("sfx"))
     return (
-        sfx.join(F.broadcast(bl), sfx["sfx"] == bl["domain"])
+        sfx.join(bl, sfx["sfx"] == bl["domain"])
         .groupBy("doc_id")
         .agg(F.max("host").alias("host"),  # constant within a doc
              F.max_by("sfx", F.length("sfx")).alias("matched_domain"))

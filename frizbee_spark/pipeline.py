@@ -40,6 +40,7 @@ efficiency was 0.232 with them, see BENCH.md history).
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -63,6 +64,8 @@ from .operators.dedup import (
     winnow_span_pairs,
     with_doc_id,
 )
+
+log = logging.getLogger(__name__)
 
 # stages whose output is consumed exactly once by the next stage — flowing
 # them through keeps candidate generation + verification one Spark query
@@ -720,12 +723,10 @@ class NearDupPipeline:
                     "original config."
                 )
             if stored is None:
-                import sys
-
-                print(
-                    f"frizbee: resuming unstamped '{name}' checkpoint "
-                    "(written before config stamping) — cannot verify the "
-                    "signature family matches", file=sys.stderr,
+                log.warning(
+                    "resuming unstamped '%s' checkpoint (written before "
+                    "config stamping) — cannot verify the signature family "
+                    "matches", name,
                 )
         if not resumed:
             # job description is a thread-local Spark property, so the

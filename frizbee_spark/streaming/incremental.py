@@ -28,6 +28,8 @@ corpus.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.dedup import (
@@ -37,6 +39,8 @@ from ..operators.dedup import (
     pairs_from_buckets,
     verify_pairs,
 )
+
+log = logging.getLogger(__name__)
 
 
 def explode_bands(
@@ -192,11 +196,9 @@ def make_batch_processor(spark, state_dir: str, cfg: DedupConfig = DEFAULT_DEDUP
                 )
             return
         if os.path.isdir(sig_path):
-            import sys
-
-            print(f"frizbee: unstamped streaming state at {state_dir} "
-                  "(written before config stamping) — cannot verify the "
-                  "signature family matches", file=sys.stderr)
+            log.warning("unstamped streaming state at %s (written before "
+                        "config stamping) — cannot verify the signature "
+                        "family matches", state_dir)
         os.makedirs(state_dir, exist_ok=True)
         with open(meta_path, "w") as f:
             json.dump(meta, f)

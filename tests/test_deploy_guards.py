@@ -5,6 +5,7 @@ stamped with its hash-family identity and fails loudly on mismatch, and
 """
 
 import json
+import logging
 import os
 
 import pytest
@@ -100,6 +101,35 @@ class TestSignatureFamilyStamp:
             bad(docs.limit(40), 1)
         # original family continues
         make_batch_processor(spark, state, CFG)(docs.limit(40), 1)
+
+    def test_unstamped_pipeline_checkpoint_logs_warning(self, spark, corpus_dir,
+                                                        tmp_path, caplog):
+        work = str(tmp_path / "unstamped")
+        cfg = PipelineConfig(workdir=work, dedup=CFG)
+        NearDupPipeline(spark, cfg).run(input_path=corpus_dir, until="signatures")
+        os.remove(os.path.join(work, "signatures", "_meta.json"))
+        with caplog.at_level(logging.WARNING, logger="frizbee_spark.pipeline"):
+            NearDupPipeline(spark, cfg).run(input_path=corpus_dir, until="signatures")
+        assert [r.levelno for r in caplog.records
+                if "unstamped 'signatures'" in r.getMessage()] == [logging.WARNING]
+
+    def test_unstamped_streaming_state_logs_warning(self, spark, corpus_dir,
+                                                    tmp_path, caplog):
+        from frizbee_spark.streaming.incremental import make_batch_processor
+
+        docs = spark.read.parquet(corpus_dir + "/documents.parquet").select(
+            "url", "text"
+        )
+        state = str(tmp_path / "stream_state")
+        make_batch_processor(spark, state, CFG)(docs.limit(40), 0)
+        os.remove(os.path.join(state, "_sigmeta.json"))
+        with caplog.at_level(logging.WARNING,
+                             logger="frizbee_spark.streaming.incremental"):
+            make_batch_processor(spark, state, CFG)(docs.limit(40), 1)
+        assert any("unstamped streaming state" in r.getMessage()
+                   for r in caplog.records)
+        # the resumed state is stamped again
+        assert os.path.exists(os.path.join(state, "_sigmeta.json"))
 
 
 class TestShmElection:

@@ -116,6 +116,26 @@ class TestCmSketch:
         assert plan.count("Exchange") == 1
         assert "partial_sum" in plan  # map-side combine
 
+    def test_table_pinned_and_one_scan(self, spark):
+        # cells are md5 addresses of 'cm<row>:' || value — recomputed here
+        # with hashlib, so the table is pinned independently of the plan
+        import hashlib
+        from collections import Counter
+
+        from frizbee_spark.operators.sketches import cm_sketch
+
+        toks = self._tokens(spark, 3000)
+        sk = cm_sketch(toks, "token", depth=5, width=97)
+        plan = sk._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Range (") == 1 and "Union" not in plan
+        want = Counter()
+        for r in toks.collect():
+            for row in range(5):
+                h = hashlib.md5(f"cm{row}:{r['token']}".encode()).hexdigest()
+                want[(row, int(h[:15], 16) % 97)] += 1
+        got = {(r["row"], r["cell"]): r["cnt"] for r in sk.collect()}
+        assert got == dict(want)
+
     def test_validation(self, spark):
         from frizbee_spark.operators.sketches import cm_sketch
 

@@ -477,6 +477,34 @@ class TestUrlBlocklist:
         with pytest.raises(ValueError, match="non-empty"):
             url_blocklist(df, [])
 
+    def test_dataframe_blocklist_normalized_like_list(self, spark):
+        from frizbee_spark.operators.webnorm import url_blocklist
+
+        df = spark.createDataFrame(self.ROWS, "doc_id long, url string")
+        bl = spark.createDataFrame([("badnet.org.",), (".Site.Example",)],
+                                   "domain string")
+        got = {r["doc_id"] for r in url_blocklist(df, bl).collect()}
+        assert got == {1, 2, 4, 5, 6}
+        with pytest.raises(ValueError, match="non-empty"):
+            url_blocklist(df, spark.createDataFrame([], "domain string"))
+
+    def test_large_list_can_shuffle(self, spark):
+        # no forced broadcast: over the broadcast threshold the equi-join
+        # falls back to a shuffle join on the domain key
+        from frizbee_spark.operators.webnorm import url_blocklist
+
+        df = spark.createDataFrame(self.ROWS, "doc_id long, url string")
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            out = url_blocklist(df, self.BL)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in plan
+            assert {r["doc_id"] for r in out.collect()} == {1, 2, 4, 5, 6}
+        finally:
+            spark.conf.set(key, old)
+
     def test_plan_broadcasts_list(self, spark):
         from frizbee_spark.operators.webnorm import url_blocklist
 
