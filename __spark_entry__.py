@@ -946,7 +946,7 @@ _CLUSTERED_CACHE: dict = {}
 
 def release_clustered_cache() -> int:
     """Drop the session-scoped derived ANN corpus (both the persist and
-    the memo entries). Called by bench.py / scripts/check_oracles.py at
+    the memo entries). Called by scripts/check_oracles.py at
     session end and by the cache-lifecycle tests."""
     from frizbee_spark.util import release_session_persisted
 

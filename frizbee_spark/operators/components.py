@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..util import tracked_local_checkpoint
+
 
 def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
     row = edges.select(
@@ -150,13 +152,16 @@ def connected_components(
     downstream cluster assignments.
     """
 
+    chain: list[DataFrame] = []
+
     def _truncate(df: DataFrame) -> DataFrame:
         if reliable_checkpoint:
             return df.checkpoint(eager=False)
         if use_local_checkpoint:
             # lazy: materialized by the next checksum collect — no extra
-            # action per round
-            return df.localCheckpoint(eager=False)
+            # action per round; rounds before the last materialized one
+            # are dropped, the result's own is released by its owner
+            return tracked_local_checkpoint(df, chain)
         return df
 
     canon = _canon(edges)

@@ -508,49 +508,169 @@ def pairs_from_buckets(
     return pairs.dropDuplicates(["a", "b"])
 
 
+#: priority-ordered tier codes of the candidate bucket table — lower
+#: code = cheaper/stronger evidence, wins the per-pair attribution
+TIER_LABELS = ("exact", "minhash_lsh", "minhash_lsh_short", "simhash")
+_EXACT, _LSH, _SHORT, _SIM = range(len(TIER_LABELS))
+_ALL_TIERS = (_EXACT, _LSH, _SHORT, _SIM)
+
+
+def _bucket_rows(
+    signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP,
+    tiers=_ALL_TIERS,
+) -> DataFrame:
+    """The candidate bucket table: one ``(bkey, tier, doc_id)`` row per
+    bucket a doc falls in, for each requested tier code. Every candidate
+    source — the public pair generators below and the streaming
+    increment — pairs these rows, so a bucket means the same thing on
+    every path.
+
+    ``bkey`` is ``xxhash64(tag, coords...)``; the tag keeps the tiers'
+    key spaces apart, so every bucket holds rows of one tier:
+
+    - exact: ``(text_hash, n_bytes)`` — same normalized text;
+    - minhash_lsh: ``(band_id, band_key)`` over the main 32x4 bands;
+    - minhash_lsh_short: ``(band_id + bands, band_key)`` over the tier-2
+      short-doc bands (none when ``short_doc_max_bytes`` is 0);
+    - simhash: ``(table, block key)`` over :func:`simhash_table_layout`
+      — pigeonhole-complete within the Hamming ball, ~32-bit keys so
+      chance buckets stay empty at web scale.
+
+    One generator over the signature table, not one scan per tier.
+    """
+    keys = {
+        _EXACT: F.array(F.xxhash64(F.lit("exact"), "text_hash", "n_bytes")),
+        _LSH: F.transform(
+            "band_keys", lambda k, i: F.xxhash64(F.lit("lsh"), i, k)),
+        _SHORT: F.transform(
+            "short_band_keys",
+            lambda k, i: F.xxhash64(F.lit("lsh2"), i + cfg.bands, k)),
+        _SIM: F.array(*[
+            F.xxhash64(F.lit("simhash"), F.lit(t),
+                       _simhash_key_col(F.col("simhash"), blocks))
+            for t, blocks in enumerate(simhash_table_layout(cfg.hamming_max))
+        ]),
+    }
+    rows = F.concat(*[
+        F.transform(keys[t], lambda k: F.struct(
+            k.alias("bkey"), F.lit(t).alias("tier")))
+        for t in tiers if t != _SHORT or cfg.short_doc_max_bytes > 0
+    ])
+    return signatures.select(F.inline(rows), "doc_id")
+
+
+def _tier_pairs(rows: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP) -> DataFrame:
+    """Bucket rows -> ``(a, b, tier)``: each pair's highest-priority
+    ACCEPTING tier code; pairs no tier accepts are dropped.
+
+    One pairing shuffle (one row per (bucket, pair), the tier riding as
+    the kernel payload) and one closing groupBy, which replaces
+    dropDuplicates at the same shuffle cost. Because a bucket holds one
+    tier, the tier-2 count is the pair's distinct-band collision count.
+    This is the one place the tier-2 rule is written: r=2 bands are
+    individually hot, so a pair with no exact or main-band collision
+    needs >= ``short_min_bands`` tier-2 collisions; failing that it
+    falls to ``simhash`` if a SimHash table collides, else it is
+    dropped. The SimHash Hamming post-filter is the caller's.
+
+    Rows with a boolean ``new`` column (an increment) also yield ``new``:
+    whether either endpoint is a new doc. It rides the same payload
+    (tier + 4 on a new doc's rows), so it costs no join.
+    """
+    incremental = "new" in rows.columns
+    payload = F.col("tier")
+    if incremental:
+        payload = payload + F.when(F.col("new"), 4).otherwise(0)
+    raw = pairs_from_buckets(
+        rows.withColumn("_payload", payload), ["bkey"], cfg,
+        keep_multiplicity=True, payload="_payload",
+    )
+    t = F.col("payload_a").bitwiseAND(3)
+    aggs = [
+        F.min(t).alias("_best"),
+        F.sum((t == _SHORT).cast("long")).alias("_n2"),
+        F.max(t == _SIM).alias("_sim"),
+    ]
+    if incremental:
+        aggs.append(F.max(F.greatest("payload_a", "payload_b") >= 4).alias("new"))
+    tier = (
+        F.when(F.col("_best") <= _LSH, F.col("_best"))
+        .when(F.col("_n2") >= cfg.short_min_bands, _SHORT)
+        .when(F.col("_sim"), _SIM)
+    )
+    return (
+        raw.groupBy("a", "b").agg(*aggs)
+        .select("a", "b", tier.alias("tier"), *(["new"] if incremental else []))
+        .filter(F.col("tier").isNotNull())
+    )
+
+
+def _with_hamming(pairs: DataFrame, signatures: DataFrame, cols=()) -> DataFrame:
+    """Join both endpoints' ``simhash`` (and ``cols``) onto ``(a, b)``
+    pairs as ``<col>_a``/``<col>_b`` and add their Hamming distance
+    ``_ham`` — a few bytes per doc per side; text never shuffles."""
+    s = signatures.select("doc_id", "simhash", *cols)
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            s.toDF(side, *[f"{c}_{side}" for c in ("simhash", *cols)]), side)
+    return pairs.withColumn(
+        "_ham", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
+
+
+def _gate_and_cap(
+    pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP,
+) -> DataFrame:
+    """The Hamming gate and per-doc degree cap every deduplicated
+    candidate set passes (batch and increments): ``(a, b)`` -> ``(a, b)``.
+
+    Gate: keep a pair iff it is an exact dup, either doc is shorter than
+    ``hamming_gate_min_bytes``, or its SimHash distance is within
+    ``verify_hamming_reject`` — the gate verify_pairs applies, done here
+    so SimHash chance collisions never reach a checkpoint or the text
+    join (the candidate table is ~3x smaller).
+
+    Cap (see DedupConfig.degree_cap): rank each doc's partners by
+    (Hamming, partner id); an edge survives if EITHER endpoint ranks it
+    within the cap.
+    """
+    gated = (
+        _with_hamming(pairs, signatures, ("text_hash", "n_bytes"))
+        .filter(
+            (F.col("text_hash_a") == F.col("text_hash_b"))
+            | (F.least("n_bytes_a", "n_bytes_b") < cfg.hamming_gate_min_bytes)
+            | (F.col("_ham") <= cfg.verify_hamming_reject)
+        )
+        .select("a", "b", "_ham")
+    )
+    gated = tracked_persist(gated)  # consumed twice by the union below;
+    # released by the owning unit of work (util.release_tracked)
+    both = gated.select(F.col("a").alias("u"), F.col("b").alias("v"), "_ham").unionByName(
+        gated.select(F.col("b").alias("u"), F.col("a").alias("v"), "_ham")
+    )
+    w = Window.partitionBy("u").orderBy(F.asc("_ham"), F.asc("v"))
+    return (
+        both.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= cfg.degree_cap)
+        .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
 def exact_hash_pairs(signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP) -> DataFrame:
     """Exact-duplicate edges: same (xxhash64(norm_text), n_bytes) bucket."""
-    b = signatures.select("text_hash", "n_bytes", "doc_id")
-    return pairs_from_buckets(b, ["text_hash", "n_bytes"], cfg)
+    return _tier_pairs(_bucket_rows(signatures, cfg, (_EXACT,)), cfg).select("a", "b")
 
 
 def lsh_band_pairs(signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP) -> DataFrame:
     """MinHash-LSH candidate edges: same (band_id, band_key) bucket.
 
     Two tiers share ONE pair-generation pass: the main 32x4 bands (every
-    doc) and the tier-2 64x2 short-doc bands (band_id offset by
-    cfg.bands; see DedupConfig.short_doc_max_bytes). A tier-2-only pair
-    must collide in >= short_min_bands distinct bands — narrow bands are
-    individually hot, and requiring two independent collisions squares
-    the chance rate while costing ~3e-4 recall at J=0.4. The flag rides
-    the pairing shuffle as the kernel payload, so the multiplicity rule
-    costs zero extra shuffles (the closing groupBy replaces
-    dropDuplicates on the same keys)."""
-    b = signatures.select(
-        F.posexplode("band_keys").alias("band_id", "band_key"), "doc_id"
-    )
-    if cfg.short_doc_max_bytes <= 0:
-        return pairs_from_buckets(b, ["band_id", "band_key"], cfg)
-    b2 = signatures.select(
-        F.posexplode("short_band_keys").alias("_p", "band_key"), "doc_id"
-    ).select(
-        (F.col("_p") + cfg.bands).alias("band_id"), "band_key", "doc_id"
-    )
-    buckets = (
-        b.withColumn("fl", F.lit(0))
-        .unionByName(b2.withColumn("fl", F.lit(1)))
-    )
-    raw = pairs_from_buckets(
-        buckets, ["band_id", "band_key"], cfg,
-        keep_multiplicity=True, payload="fl",
-    )
-    return (
-        raw.groupBy("a", "b")
-        .agg(F.min("payload_a").alias("_minfl"), F.count("*").alias("_n"))
-        .filter((F.col("_minfl") == 0)
-                | (F.col("_n") >= cfg.short_min_bands))
-        .select("a", "b")
-    )
+    doc) and the tier-2 64x2 short-doc bands (see
+    DedupConfig.short_doc_max_bytes), whose pairs must pass the
+    ``short_min_bands`` multiplicity rule of :func:`_tier_pairs`."""
+    return _tier_pairs(
+        _bucket_rows(signatures, cfg, (_LSH, _SHORT)), cfg
+    ).select("a", "b")
 
 
 def minhash_jaccard_estimate(
@@ -594,112 +714,19 @@ def unified_candidate_pairs(
 ) -> DataFrame:
     """All candidate sources through ONE pair-generation pass.
 
-    The exact-hash, MinHash-LSH-band, SimHash-chunk, and tier-2
-    short-doc-band bucket tables are unioned under a single 64-bit bucket
-    key (xxhash64 of source tag + bucket coordinates) before pair
-    generation, so the sizes/join/window machinery of pairs_from_buckets
-    runs once instead of per source — ~3-4x fewer shuffles and scheduler
-    stages than generating per-source pairs and unioning afterwards.
-    Source-specific post-filters (SimHash Hamming) are applied downstream
-    by verify_pairs' reject gate, which every pair passes through anyway;
-    the tier-2 multiplicity rule is applied by the closing groupBy (which
-    replaces dropDuplicates at the same shuffle cost).
+    The exact-hash, MinHash-LSH-band, tier-2 short-doc-band and
+    SimHash-table buckets (:func:`_bucket_rows`) are paired together, so
+    the sizes/join/window machinery of pairs_from_buckets runs once
+    instead of per source — ~3-4x fewer shuffles and scheduler stages
+    than generating per-source pairs and unioning afterwards. The tier-2
+    multiplicity rule is applied by the closing groupBy
+    (:func:`_tier_pairs`); SimHash pairs are not filtered at
+    ``hamming_max`` here but by the shared Hamming gate and degree cap
+    (:func:`_gate_and_cap`).
     """
-    exact_b = signatures.select(
-        F.xxhash64(F.lit("exact"), "text_hash", "n_bytes").alias("bkey"), "doc_id"
-    )
-    lsh_b = signatures.select(
-        F.posexplode("band_keys").alias("band_id", "band_key"), "doc_id"
-    ).select(F.xxhash64(F.lit("lsh"), "band_id", "band_key").alias("bkey"), "doc_id")
-    # block-combination tables (simhash_table_layout): pigeonhole-complete
-    # within the Hamming ball, ~32-bit keys so chance buckets stay empty
-    # at web scale — this is what lets enable_simhash default to True
-    sim_b = signatures.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.xxhash64(
-                    F.lit("simhash"), F.lit(t),
-                    _simhash_key_col(F.col("simhash"), blocks),
-                )
-                for t, blocks in enumerate(simhash_table_layout(cfg.hamming_max))
-            ])
-        ).alias("bkey"),
-    ).select("bkey", "doc_id")
-    buckets = exact_b.unionByName(lsh_b)
-    if include_simhash:
-        buckets = buckets.unionByName(sim_b)
-    if cfg.short_doc_max_bytes > 0:
-        # tier-2 short-doc bands (see lsh_band_pairs): weak buckets,
-        # flagged so the closing groupBy can require >= short_min_bands
-        # independent collisions for tier-2-only pairs. The flag rides
-        # the one pairing shuffle as the kernel payload.
-        short_b = signatures.select(
-            F.posexplode("short_band_keys").alias("_p", "band_key"), "doc_id"
-        ).select(
-            F.xxhash64(F.lit("lsh2"), F.col("_p") + cfg.bands,
-                       "band_key").alias("bkey"),
-            "doc_id",
-        )
-        buckets = (
-            buckets.withColumn("fl", F.lit(0))
-            .unionByName(short_b.withColumn("fl", F.lit(1)))
-        )
-        raw = (
-            pairs_from_buckets(buckets, ["bkey"], cfg,
-                               keep_multiplicity=True, payload="fl")
-            .groupBy("a", "b")
-            .agg(F.min("payload_a").alias("_minfl"),
-                 F.count("*").alias("_n"))
-            .filter((F.col("_minfl") == 0)
-                    | (F.col("_n") >= cfg.short_min_bands))
-            .select("a", "b")
-        )
-    else:
-        raw = pairs_from_buckets(buckets, ["bkey"], cfg)
-    # drop SimHash-chunk chance collisions NOW (one 8-byte join) so they
-    # never reach a checkpoint or the text join: keep a pair iff it is an
-    # exact dup or within the Hamming acceptance ball. This is the same
-    # gate verify_pairs applies; doing it here keeps the candidate table
-    # ~3x smaller.
-    s = signatures.select("doc_id", "text_hash", "simhash", "n_bytes")
-    gated = (
-        raw.join(s.withColumnsRenamed(
-            {"doc_id": "a", "text_hash": "_ha", "simhash": "_sa", "n_bytes": "_na"}), "a")
-        .join(s.withColumnsRenamed(
-            {"doc_id": "b", "text_hash": "_hb", "simhash": "_sb", "n_bytes": "_nb"}), "b")
-        .filter(
-            (F.col("_ha") == F.col("_hb"))
-            | (F.least("_na", "_nb") < cfg.hamming_gate_min_bytes)
-            | (F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-               <= cfg.verify_hamming_reject)
-        )
-        .select(
-            "a", "b",
-            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("_ham"),
-        )
-    )
-    gated = tracked_persist(gated)  # consumed twice by the degree-cap union
-    # below; released by the owning unit of work (util.release_tracked)
-    # per-doc degree cap (see DedupConfig.degree_cap): rank each doc's
-    # partners by (Hamming, partner id); an edge survives if EITHER
-    # endpoint ranks it within the cap
-    both = gated.select(F.col("a").alias("u"), F.col("b").alias("v"), "_ham").unionByName(
-        gated.select(F.col("b").alias("u"), F.col("a").alias("v"), "_ham")
-    )
-    w = Window.partitionBy("u").orderBy(F.asc("_ham"), F.asc("v"))
-    kept = (
-        both.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= cfg.degree_cap)
-        .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    return kept
-
-
-#: priority-ordered tier codes for :func:`candidate_tier_attribution` —
-#: lower code = cheaper/stronger evidence, wins the per-pair attribution
-TIER_LABELS = ("exact", "minhash_lsh", "minhash_lsh_short", "simhash")
+    tiers = _ALL_TIERS if include_simhash else (_EXACT, _LSH, _SHORT)
+    pairs = _tier_pairs(_bucket_rows(signatures, cfg, tiers), cfg)
+    return _gate_and_cap(pairs.select("a", "b"), signatures, cfg)
 
 
 def candidate_tier_attribution(
@@ -720,83 +747,19 @@ def candidate_tier_attribution(
     simhash_pairs`` (the unified pipeline's pre-gate candidate set,
     minus the degree cap, which is a budget device rather than a tier).
 
-    Plan shape (same scale story as :func:`unified_candidate_pairs`):
-    all four bucket families union under one 64-bit key with the tier
-    code riding the single pairing shuffle as the kernel payload; the
-    closing groupBy applies the tier-2 multiplicity rule and the
-    priority min at once, and one join against the 24-byte/doc simhash
-    projection applies the Hamming gate. Text never shuffles.
+    Plan shape (same as :func:`unified_candidate_pairs`): one pairing
+    shuffle over all four bucket families, one closing groupBy, and one
+    join against the 8-byte/doc simhash projection for the Hamming
+    filter. Text never shuffles.
 
     Output: (a, b, tier) with a < b, tier in :data:`TIER_LABELS`.
     """
-    tagged = [
-        signatures.select(
-            F.xxhash64(F.lit("exact"), "text_hash", "n_bytes").alias("bkey"),
-            "doc_id", F.lit(0).alias("fl"),
-        ),
-        signatures.select(
-            F.posexplode("band_keys").alias("band_id", "band_key"), "doc_id"
-        ).select(
-            F.xxhash64(F.lit("lsh"), "band_id", "band_key").alias("bkey"),
-            "doc_id", F.lit(1).alias("fl"),
-        ),
-        signatures.select(
-            "doc_id",
-            F.explode(
-                F.array(*[
-                    F.xxhash64(
-                        F.lit("simhash"), F.lit(t),
-                        _simhash_key_col(F.col("simhash"), blocks),
-                    )
-                    for t, blocks in enumerate(simhash_table_layout(cfg.hamming_max))
-                ])
-            ).alias("bkey"),
-        ).select("bkey", "doc_id", F.lit(3).alias("fl")),
-    ]
-    if cfg.short_doc_max_bytes > 0:
-        tagged.append(
-            signatures.select(
-                F.posexplode("short_band_keys").alias("_p", "band_key"), "doc_id"
-            ).select(
-                F.xxhash64(F.lit("lsh2"), F.col("_p") + cfg.bands,
-                           "band_key").alias("bkey"),
-                "doc_id", F.lit(2).alias("fl"),
-            )
-        )
-    buckets = tagged[0]
-    for t in tagged[1:]:
-        buckets = buckets.unionByName(t)
-    agg = (
-        pairs_from_buckets(buckets, ["bkey"], cfg,
-                           keep_multiplicity=True, payload="fl")
-        # the bucket key embeds the tier, so payload_a == payload_b on
-        # every emitted row; one row per (bucket, pair) means the
-        # tier-2 count below is the distinct-band collision count
-        .groupBy("a", "b")
-        .agg(
-            F.min("payload_a").alias("_best"),
-            F.sum((F.col("payload_a") == 2).cast("long")).alias("_n2"),
-            F.max((F.col("payload_a") == 3).cast("int")).alias("_has3"),
-        )
+    return (
+        _with_hamming(_tier_pairs(_bucket_rows(signatures, cfg), cfg), signatures)
+        .filter((F.col("tier") != _SIM) | (F.col("_ham") <= cfg.hamming_max))
+        .select("a", "b",
+                F.array(*map(F.lit, TIER_LABELS))[F.col("tier")].alias("tier"))
     )
-    sim = signatures.select("doc_id", "simhash")
-    j = (
-        agg.join(sim.withColumnsRenamed({"doc_id": "a", "simhash": "_sa"}), "a")
-        .join(sim.withColumnsRenamed({"doc_id": "b", "simhash": "_sb"}), "b")
-    )
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    accepted = (
-        (F.col("_best") <= 1)
-        | (F.col("_n2") >= cfg.short_min_bands)
-        | ((F.col("_has3") == 1) & (ham <= cfg.hamming_max))
-    )
-    tier = (
-        F.when(F.col("_best") == 0, TIER_LABELS[0])
-        .when(F.col("_best") == 1, TIER_LABELS[1])
-        .when(F.col("_n2") >= cfg.short_min_bands, TIER_LABELS[2])
-        .otherwise(TIER_LABELS[3])
-    )
-    return j.filter(accepted).select("a", "b", tier.alias("tier"))
 
 
 def simhash_table_layout(hamming_max: int) -> list[tuple[tuple[int, int], ...]]:
@@ -868,26 +831,10 @@ def simhash_pairs(signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP) -> Da
     afterwards is exact and JVM-side (survey F7 — the reference's dormant
     bitmask prefilter, compared by popcount there too: bitmask.rs:50-58).
     """
-    layout = simhash_table_layout(cfg.hamming_max)
-    chunks = signatures.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(t).alias("chunk_id"),
-                    _simhash_key_col(F.col("simhash"), blocks).alias("chunk"),
-                )
-                for t, blocks in enumerate(layout)
-            ])
-        ).alias("c"),
-    ).select("doc_id", "c.chunk_id", "c.chunk")
-    pairs = pairs_from_buckets(chunks.select("chunk_id", "chunk", "doc_id"),
-                               ["chunk_id", "chunk"], cfg)
-    sim = signatures.select("doc_id", "simhash")
+    pairs = _tier_pairs(_bucket_rows(signatures, cfg, (_SIM,)), cfg)
     return (
-        pairs.join(sim.withColumnsRenamed({"doc_id": "a", "simhash": "_sa"}), "a")
-        .join(sim.withColumnsRenamed({"doc_id": "b", "simhash": "_sb"}), "b")
-        .filter(F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))) <= cfg.hamming_max)
+        _with_hamming(pairs.select("a", "b"), signatures)
+        .filter(F.col("_ham") <= cfg.hamming_max)
         .select("a", "b")
     )
 

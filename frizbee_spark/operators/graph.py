@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import tracked_persist
+from ..util import tracked_local_checkpoint, tracked_persist
 
 
 def host_pagerank(
@@ -76,6 +76,8 @@ def host_pagerank(
     its lineage (the standard cadence for iterative DataFrame jobs; on a
     real cluster with executor churn, swap in reliable ``checkpoint()``
     against the checkpoint dir — same call site, stronger storage).
+    A checkpoint is dropped once a later one has materialized; the last
+    one is released with the caller's ``release_tracked``.
 
     The returned frame is live (not persisted); callers owning a unit
     of work release intermediates via ``release_tracked`` as usual.
@@ -104,6 +106,7 @@ def host_pagerank(
     ranks = tracked_persist(
         nodes.withColumn("rank_u", F.lit(base).cast("long")))
     prev = None
+    chain: list[DataFrame] = []
     for it in range(n_iter):
         # one scalar action: dangling mass = total held by sink hosts.
         # Materializes the persisted current ranks, so the previous
@@ -134,6 +137,6 @@ def host_pagerank(
             ).cast("long").alias("_num"),
         ).select("host", F.expr("_num DIV 100").alias("rank_u"))
         if (it + 1) % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=False)
+            nxt = tracked_local_checkpoint(nxt, chain)
         prev, ranks = ranks, tracked_persist(nxt)
     return ranks

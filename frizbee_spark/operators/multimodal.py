@@ -802,7 +802,9 @@ def _parse_mp3_meta(b: bytes):
     then step frame to frame via the header length formula
     144*bitrate/samplerate + padding. CBR/VBR both handled (bit_rate is
     the per-frame average). Stops at the first non-frame byte (e.g. an
-    ID3v1 'TAG' trailer) and ignores a truncated tail frame."""
+    ID3v1 'TAG' trailer) or at the first frame whose sample rate differs
+    from the first frame's (every frame's duration is 1152 samples at the
+    stream's one rate), and ignores a truncated tail frame."""
     off = 0
     if b[:3] == b"ID3" and len(b) >= 10:
         sz = 0
@@ -822,7 +824,10 @@ def _parse_mp3_meta(b: bytes):
         pad = (h[2] >> 1) & 1
         if bi not in _MP3_BITRATE_KBPS or sri not in _MP3_SR:
             break  # free-format/bad bitrate or reserved samplerate
-        kbps, sr = _MP3_BITRATE_KBPS[bi], _MP3_SR[sri]
+        kbps, rate = _MP3_BITRATE_KBPS[bi], _MP3_SR[sri]
+        if n_frames and rate != sr:
+            break  # sample rate changed mid-stream: a malformed tail
+        sr = rate
         flen = 144 * kbps * 1000 // sr + pad
         if off + flen > len(b):
             break  # truncated tail frame: not counted

@@ -4,9 +4,12 @@ The reference's incremental matcher pre-interleaves all haystacks once and
 recomputes only what a new needle invalidates
 (/root/reference/src/incremental/matcher.rs:13-118). Our distributed
 analog: the signature table is the persisted "pre-interleaved" state; a
-new crawl increment only computes signatures for NEW docs and matches
-them against (a) themselves and (b) the existing signature index —
-never recomputing old-vs-old.
+new crawl increment only computes signatures for NEW docs and pairs only
+the buckets a new doc falls in — never recomputing old-vs-old. Like the
+reference's incremental matcher, which decides a match exactly as its
+one-shot matcher does, an increment uses the batch candidate rule: the
+same bucket table, tier-2 multiplicity rule, Hamming gate and degree cap
+as ``unified_candidate_pairs``.
 
 Two surfaces:
 
@@ -19,11 +22,9 @@ Two surfaces:
   not in Spark operator state, so a stream restart resumes from storage —
   same checkpoint discipline as the batch pipeline.
 
-Scale note: new-vs-existing candidate generation reuses the same LSH
-band keys, so the probe is an equi-join of the increment's exploded bands
-(small) against the historical band table (large, bucketed by band_key in
-Iceberg) — a broadcast or storage-partitioned join, not a rescan of the
-corpus.
+Scale note: the existing side of an increment is the historical bucket
+table left-semi-joined on the increment's bucket keys (small), so only
+buckets a new doc touches reach the pairing shuffle.
 """
 
 from __future__ import annotations
@@ -35,37 +36,37 @@ from pyspark.sql import DataFrame, functions as F
 from ..operators.dedup import (
     DEFAULT_DEDUP,
     DedupConfig,
+    _bucket_rows,
+    _gate_and_cap,
+    _tier_pairs,
     compute_signatures,
-    pairs_from_buckets,
     verify_pairs,
 )
 
 log = logging.getLogger(__name__)
 
 
-def explode_bands(
-    signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP
+def _increment_pairs(
+    new_sigs: DataFrame,
+    existing_signatures: DataFrame | None,
+    cfg: DedupConfig = DEFAULT_DEDUP,
 ) -> DataFrame:
-    """One row per (band, key, doc): the main tier plus (when present)
-    the tier-2 short-doc bands with band_id offset by cfg.bands — the
-    same disjoint id space the batch pair generators use.
+    """An increment's candidate pairs before the gate and cap:
+    ``(a, b, tier)`` for every pair with at least one new endpoint.
 
-    Incremental note: the probe join treats tier-2 hits at multiplicity
-    >= 1 (vs the batch path's >= short_min_bands rule) — increments are
-    small, so the extra chance candidates are few and the SW verifier
-    rejects them; candidates are strictly a superset of the batch rule's.
-    """
-    main = signatures.select(
-        F.posexplode("band_keys").alias("band_id", "band_key"), "doc_id"
-    )
-    if cfg.short_doc_max_bytes <= 0 or "short_band_keys" not in signatures.columns:
-        return main
-    tier2 = signatures.select(
-        F.posexplode("short_band_keys").alias("_p", "band_key"), "doc_id"
-    ).select(
-        (F.col("_p") + cfg.bands).alias("band_id"), "band_key", "doc_id"
-    )
-    return main.unionByName(tier2)
+    The bucket rows of ``existing ∪ new`` are restricted to the buckets
+    whose key a new doc has, then paired by the batch step
+    (:func:`~frizbee_spark.operators.dedup._tier_pairs`). A kept bucket
+    holds all its docs, so a pair touching a new doc sees every bucket it
+    shares: its tier-2 count, and so its tier, equal the batch pipeline's.
+    Old-vs-old pairs of those buckets see only part of their buckets and
+    are dropped."""
+    rows = _bucket_rows(new_sigs, cfg).withColumn("new", F.lit(True))
+    if existing_signatures is not None:
+        old = _bucket_rows(existing_signatures, cfg).join(
+            rows.select("bkey"), "bkey", "left_semi")
+        rows = rows.unionByName(old.withColumn("new", F.lit(False)))
+    return _tier_pairs(rows, cfg).filter("new").drop("new")
 
 
 def incremental_dedup_batch(
@@ -79,49 +80,16 @@ def incremental_dedup_batch(
 
     Candidates cover new-vs-new AND new-vs-existing pairs; existing-vs-
     existing is never recomputed (the incremental-matcher property).
+    They pass the batch Hamming gate and degree cap over all signatures.
     Callers verify with :func:`verify_increment`.
     """
     new_sigs = compute_signatures(new_docs, cfg, id_col=id_col, text_col=text_col)
-
-    new_bands = explode_bands(new_sigs, cfg)
-    nn_pairs = pairs_from_buckets(new_bands, ["band_id", "band_key"], cfg)
-    exact_nn = pairs_from_buckets(
-        new_sigs.select("text_hash", "n_bytes", "doc_id"), ["text_hash", "n_bytes"], cfg
-    )
-    cand = nn_pairs.unionByName(exact_nn)
-
-    if existing_signatures is not None:
-        old_bands = explode_bands(existing_signatures, cfg)
-        # probe join: every (band, key) hit links a new doc to an old doc
-        ne = (
-            new_bands.withColumnRenamed("doc_id", "new_id")
-            .join(old_bands.withColumnRenamed("doc_id", "old_id"),
-                  ["band_id", "band_key"])
-            .filter(F.col("new_id") != F.col("old_id"))
-            .select(F.least("new_id", "old_id").alias("a"),
-                    F.greatest("new_id", "old_id").alias("b"))
-        )
-        exact_ne = (
-            new_sigs.select("text_hash", "n_bytes", F.col("doc_id").alias("new_id"))
-            .join(existing_signatures.select(
-                "text_hash", "n_bytes", F.col("doc_id").alias("old_id")),
-                ["text_hash", "n_bytes"])
-            .filter(F.col("new_id") != F.col("old_id"))
-            .select(F.least("new_id", "old_id").alias("a"),
-                    F.greatest("new_id", "old_id").alias("b"))
-        )
-        cand = cand.unionByName(ne).unionByName(exact_ne)
-
-    cand = cand.dropDuplicates(["a", "b"])
-
     all_sigs = (
         new_sigs if existing_signatures is None
         else existing_signatures.unionByName(new_sigs)
     )
-    # docs table for text lookup: new docs plus whatever existing docs the
-    # caller provides through `existing_docs_lookup` — here signatures
-    # carry no text, so verify joins against the union the caller passes.
-    return new_sigs, cand, all_sigs
+    pairs = _increment_pairs(new_sigs, existing_signatures, cfg)
+    return new_sigs, _gate_and_cap(pairs.select("a", "b"), all_sigs, cfg), all_sigs
 
 
 def verify_increment(

@@ -110,7 +110,7 @@ def test_ann_session_cache_release(spark):
 @pytest.mark.spark
 def test_standalone_query_release(spark, corpus_dir):
     """A standalone operator call caches; one release empties it (the
-    bench.py per-query discipline)."""
+    per-query release discipline)."""
     from frizbee_spark.operators.dedup import (
         compute_signatures, normalize_text, unified_candidate_pairs,
         verify_pairs, with_doc_id,
@@ -124,3 +124,42 @@ def test_standalone_query_release(spark, corpus_dir):
     assert _n_cached(spark) > 0  # the operator did cache
     release_tracked()
     assert _n_cached(spark) == 0
+
+
+@pytest.mark.spark
+def test_distributed_components_release_checkpoints(spark):
+    """Every distributed connected-components round local-checkpoints its
+    edges; superseded rounds are dropped as the loop goes and the result's
+    own checkpoint goes with the caller's release."""
+    from frizbee_spark.operators.components import connected_components
+
+    # a 24-node path takes four large-star/small-star rounds
+    edges = spark.createDataFrame([(i, i + 1) for i in range(24)],
+                                  "a long, b long")
+    via_driver = sorted(map(tuple, connected_components(edges).collect()))
+    base = _n_cached(spark)
+    stars = sorted(map(tuple, connected_components(
+        edges, driver_max_edges=0).collect()))
+    assert _n_cached(spark) - base <= 3  # not one checkpoint per round
+    release_tracked()
+    assert _n_cached(spark) == base
+    assert stars == via_driver
+
+
+@pytest.mark.spark
+def test_pagerank_releases_checkpoints(spark):
+    """host_pagerank local-checkpoints its ranks every
+    ``checkpoint_every`` iterations: superseded ones are dropped as it
+    goes, the result's goes with the caller's release, and the ranks
+    still equal the integer reference."""
+    from frizbee_spark.operators.graph import host_pagerank
+    from tests.test_graph import _edges, _py_pagerank
+
+    edges = _edges()
+    df = spark.createDataFrame(edges, "src string, dst string")
+    base = _n_cached(spark)
+    ranks = {r.host: r.rank_u for r in host_pagerank(
+        df, n_iter=8, checkpoint_every=2).collect()}
+    release_tracked()
+    assert _n_cached(spark) == base
+    assert ranks == _py_pagerank(edges, n_iter=8)

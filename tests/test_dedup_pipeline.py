@@ -1,7 +1,7 @@
 """End-to-end pipeline tests on the deterministic synthetic corpus:
 recall vs brute-force ground truth, byte-identity invariant, resume
 equivalence, salting equivalence. The corpus scale is small (pytest
-budget) — bench.py exercises sf-scale runs.
+budget) — perfbench/ and the scale tests exercise larger runs.
 """
 
 import os
@@ -1114,7 +1114,7 @@ class TestShortDocTier:
         from frizbee_spark.operators.dedup import (
             DEFAULT_DEDUP, lsh_band_pairs, unified_candidate_pairs)
 
-        # the pair bench.py missed in rounds 2-4: ~190B docs at J~0.39
+        # the pair the sf-scale probe missed in rounds 2-4: ~190B docs at J~0.39
         # (scattered word edits), below the main-tier envelope
         base = ("zkdaftigu guxh vqlkjlnr dbhzbpm gljmjh kkc hjiobhz ljkvw "
                 "zejwqakl pgr cnotbnys eauy rqab pvcqvd banomzl tgyb "

@@ -408,6 +408,19 @@ class TestContainerMeta:
         assert got[6] == (128 + 320) * 1000 // 2
         assert got[1] == 2 * 1152 * 1000 // 44100
 
+    def test_mp3_sample_rate_change_ends_stream(self):
+        # 3 frames at 44.1 kHz, then 2 at 32 kHz: the walk stops at the
+        # rate change, so duration and rate are the first frames' alone
+        from frizbee_spark.operators.multimodal import _parse_mp3_meta
+        out = bytearray()
+        for sri, sr in ((0, 44100),) * 3 + ((2, 32000),) * 2:
+            flen = 144 * 128 * 1000 // sr
+            out += bytes([0xFF, 0xFB, (9 << 4) | (sri << 2), 0x44]) \
+                + b"\xaa" * (flen - 4)
+        got = _parse_mp3_meta(bytes(out))
+        assert got[1:3] == (3 * 1152 * 1000 // 44100, 44100)
+        assert got[6] == 128 * 1000
+
     def test_malformed_mp4_stops_cleanly(self):
         import struct as s
         from frizbee_spark.operators.multimodal import _parse_mp4_meta
