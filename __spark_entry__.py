@@ -57,9 +57,9 @@ def _dedup_cfg():
 
 def _pipeline_frames(spark: SparkSession, sf_dir: str) -> dict:
     """Shared dedup dataflow for the pipeline-shaped queries: signatures
-    -> unified candidates -> gated verify. One construction point so every
-    driver query goes through the optimized path (pre-join exact/Hamming
-    gates via ``signatures=``, single-pass candidate generation)."""
+    -> unified candidates -> verify. One construction point so every
+    driver query goes through the optimized path (single-pass candidate
+    generation whose exact/Hamming gate tags the pairs verify reads)."""
     from frizbee_spark.operators.dedup import (
         compute_signatures, unified_candidate_pairs, verify_pairs,
     )
@@ -71,7 +71,7 @@ def _pipeline_frames(spark: SparkSession, sf_dir: str) -> dict:
     # pipeline default since r3 (scale-safe ~32-bit table keys); the SQL
     # oracle mirrors it via sql_oracles.simhash_chunks_cte
     cands = unified_candidate_pairs(sigs, cfg, include_simhash=True)
-    verified = verify_pairs(cands, docs, cfg, signatures=sigs)
+    verified = verify_pairs(cands, docs, cfg)
     return {"cfg": cfg, "docs": docs, "sigs": sigs, "cands": cands,
             "verified": verified}
 

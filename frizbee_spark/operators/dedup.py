@@ -621,13 +621,15 @@ def _gate_and_cap(
     pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP,
 ) -> DataFrame:
     """The Hamming gate and per-doc degree cap every deduplicated
-    candidate set passes (batch and increments): ``(a, b)`` -> ``(a, b)``.
+    candidate set passes (batch and increments): ``(a, b)`` ->
+    ``(a, b, exact)``.
 
-    Gate: keep a pair iff it is an exact dup, either doc is shorter than
+    Gate: keep a pair iff it is an exact dup (equal ``text_hash``, the
+    ``exact`` tag verify_pairs reads), either doc is shorter than
     ``hamming_gate_min_bytes``, or its SimHash distance is within
-    ``verify_hamming_reject`` — the gate verify_pairs applies, done here
-    so SimHash chance collisions never reach a checkpoint or the text
-    join (the candidate table is ~3x smaller).
+    ``verify_hamming_reject``. This is the one place a pair is decided
+    exact or Hamming-rejected, so SimHash chance collisions never reach
+    a checkpoint or the text join (the candidate table is ~3x smaller).
 
     Cap (see DedupConfig.degree_cap): rank each doc's partners by
     (Hamming, partner id); an edge survives if EITHER endpoint ranks it
@@ -635,23 +637,27 @@ def _gate_and_cap(
     """
     gated = (
         _with_hamming(pairs, signatures, ("text_hash", "n_bytes"))
+        .withColumn("exact", F.col("text_hash_a") == F.col("text_hash_b"))
         .filter(
-            (F.col("text_hash_a") == F.col("text_hash_b"))
+            F.col("exact")
             | (F.least("n_bytes_a", "n_bytes_b") < cfg.hamming_gate_min_bytes)
             | (F.col("_ham") <= cfg.verify_hamming_reject)
         )
-        .select("a", "b", "_ham")
+        .select("a", "b", "exact", "_ham")
     )
     gated = tracked_persist(gated)  # consumed twice by the union below;
     # released by the owning unit of work (util.release_tracked)
-    both = gated.select(F.col("a").alias("u"), F.col("b").alias("v"), "_ham").unionByName(
-        gated.select(F.col("b").alias("u"), F.col("a").alias("v"), "_ham")
+    both = gated.select(
+        F.col("a").alias("u"), F.col("b").alias("v"), "exact", "_ham"
+    ).unionByName(
+        gated.select(F.col("b").alias("u"), F.col("a").alias("v"), "exact", "_ham")
     )
     w = Window.partitionBy("u").orderBy(F.asc("_ham"), F.asc("v"))
     return (
         both.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= cfg.degree_cap)
-        .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
+        .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"),
+                "exact")
         .dropDuplicates(["a", "b"])
     )
 
@@ -723,6 +729,10 @@ def unified_candidate_pairs(
     (:func:`_tier_pairs`); SimHash pairs are not filtered at
     ``hamming_max`` here but by the shared Hamming gate and degree cap
     (:func:`_gate_and_cap`).
+
+    Output: ``(a, b, exact)`` with a < b; ``exact`` is the gate's tag
+    (equal ``text_hash``), which :func:`verify_pairs` reads instead of
+    deciding it again.
     """
     tiers = _ALL_TIERS if include_simhash else (_EXACT, _LSH, _SHORT)
     pairs = _tier_pairs(_bucket_rows(signatures, cfg, tiers), cfg)
@@ -1045,81 +1055,46 @@ def verify_pairs(
     cfg: DedupConfig = DEFAULT_DEDUP,
     id_col: str = "doc_id",
     text_col: str = "norm_text",
-    num_partitions: int | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs -> (a, b, score, similarity, exact, verified).
 
-    With ``signatures`` (the compute_signatures output), two cheap
-    JVM-side gates run BEFORE the text join — the reference's
-    prefilter-then-verify discipline (/root/reference/README.md:49-52)
-    applied to pair verification:
+    The reference's prefilter-then-verify discipline
+    (/root/reference/README.md:49-52) applied to pair verification: the
+    cheap gates ran in candidate generation (:func:`_gate_and_cap`), and
+    verify does not work them out again. A pair tagged ``exact`` there
+    is verified at similarity 1.0 with no text crossing a shuffle or
+    entering the kernel: its text is blanked right after each text join
+    (survey A4). A pairs frame with no ``exact`` column counts as
+    untagged; exact duplicates among its pairs are still found by the
+    JVM-side text hash.
 
-      1. exact gate: equal (text_hash, n_bytes) -> verified, sim 1.0 —
-         no text ever shuffled for exact duplicates (survey A4);
-      2. SimHash reject gate: Hamming(simhash) > verify_hamming_reject ->
-         rejected — kills LSH chance collisions for the cost of an 8-byte
-         join payload + bit_count (survey F7). Near-dups at J>=0.8 sit at
-         Hamming ~6 so the gate has ~zero false rejects.
+    Every other pair runs the banded wavefront, sub-batched by the length
+    ladder (survey B1/K1/K2). The text joins are AQE broadcast/sort-merge
+    on the pair ids (never a null or constant key); at 10^12-doc scale
+    they are storage-partitioned joins on Iceberg doc_id buckets.
 
-    Only survivors join the (heavy) text columns and run the banded
-    wavefront, sub-batched by the length ladder (survey B1/K1/K2). The
-    text joins are AQE broadcast/sort-merge; at 10^12-doc scale they are
-    storage-partitioned joins on Iceberg doc_id buckets.
+    ``signatures`` is not read: the candidates carry the gate's tag. It
+    stays so that callers that still pass it keep working.
     """
     d = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_t"),
         F.xxhash64(F.col(text_col)).alias("_h"),
     )
-    pre_exact = None
-    pre_reject = None
-    work = pairs.select("a", "b")
-    if signatures is not None:
-        s = signatures.select("doc_id", "text_hash", "simhash", "n_bytes")
-        tagged = (
-            work.join(s.withColumnsRenamed(
-                {"doc_id": "a", "text_hash": "_ha", "simhash": "_sa",
-                 "n_bytes": "_na"}), "a")
-            .join(s.withColumnsRenamed(
-                {"doc_id": "b", "text_hash": "_hb", "simhash": "_sb",
-                 "n_bytes": "_nb"}), "b")
-            .withColumn("_exact", F.col("_ha") == F.col("_hb"))
-            .withColumn(
-                "_rej",
-                ~F.col("_exact")
-                & (F.least("_na", "_nb") >= cfg.hamming_gate_min_bytes)
-                & (F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-                   > cfg.verify_hamming_reject),
-            )
-        )
-        tagged = tracked_persist(tagged)  # three consumers (exact / reject /
-        # survivors): without this the candidate-generation plan upstream
-        # re-executes per branch. Released by the owning unit of work
-        # (pipeline stage boundary / streaming batch end / bench loop).
-        pre_exact = tagged.filter("_exact").select(
-            "a", "b",
-            F.lit(0).cast("long").alias("score"),
-            F.lit(1.0).alias("similarity"),
-            F.lit(True).alias("exact"),
-            F.lit(True).alias("verified"),
-        )
-        pre_reject = tagged.filter("_rej").select(
-            "a", "b",
-            F.lit(0).cast("long").alias("score"),
-            F.lit(0.0).alias("similarity"),
-            F.lit(False).alias("exact"),
-            F.lit(False).alias("verified"),
-        )
-        work = tagged.filter(~F.col("_exact") & ~F.col("_rej")).select("a", "b")
+    tag = F.col("exact") if "exact" in pairs.columns else F.lit(False)
+
+    def blank(c):
+        return F.when(F.col("_tag"), F.lit("")).otherwise(F.col(c)).alias(c)
 
     joined = (
-        work
+        pairs.select("a", "b", tag.alias("_tag"))
         .join(d.withColumnsRenamed({"doc_id": "a", "_t": "_ta", "_h": "_ha"}), "a")
+        .select("a", "b", "_tag", "_ha", blank("_ta"))
         .join(d.withColumnsRenamed({"doc_id": "b", "_t": "_tb", "_h": "_hb"}), "b")
+        .select("a", "b", "_ta", blank("_tb"),
+                (F.col("_tag") | (F.col("_ha") == F.col("_hb"))).alias("_exact"))
     )
-    if num_partitions:
-        joined = joined.repartition(num_partitions)
 
     radius, thresh = cfg.band_radius, cfg.sim_threshold
 
@@ -1127,7 +1102,7 @@ def verify_pairs(
         n = len(pdf)
         ta = [t.encode("utf-8") for t in pdf["_ta"].tolist()]
         tb = [t.encode("utf-8") for t in pdf["_tb"].tolist()]
-        exact = pdf["_ha"].to_numpy() == pdf["_hb"].to_numpy()
+        exact = pdf["_exact"].to_numpy(dtype=bool)
         scores = np.zeros(n, dtype=np.int64)
         sims = np.zeros(n, dtype=np.float64)
         sims[exact] = 1.0
@@ -1187,10 +1162,7 @@ def verify_pairs(
             yield process(pd.concat(buf, ignore_index=True))
 
     schema = "a long, b long, score long, similarity double, exact boolean, verified boolean"
-    result = joined.mapInPandas(run, schema=schema)
-    if pre_exact is not None:
-        result = result.unionByName(pre_exact).unionByName(pre_reject)
-    return result
+    return joined.mapInPandas(run, schema=schema)
 
 
 def explain_pair(

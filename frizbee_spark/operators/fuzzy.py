@@ -5,12 +5,14 @@ Local (driver/UDF-side, NumPy) core re-expressing the reference surface:
   - match_indices         (reference: src/one_shot/indices.rs:13-56)
   - IncrementalMatcher    (reference: src/incremental/matcher.rs:6-118)
 
-Distributed operator:
-  - fuzzy_match(df, needle) — one needle against a DataFrame of candidate
-    strings via ``mapInPandas`` (Arrow batches are the SIMD lanes); the
-    final sort/limit is ordinary Catalyst (``orderBy`` replaces the
-    reference's rayon parallel sort, partitions replace its scoped
-    threads: src/one_shot/parallel/mod.rs:19-46).
+Distributed operators:
+  - fuzzy_join(df, needles) — many needles against a DataFrame of
+    candidate strings via ``mapInPandas`` (Arrow batches are the SIMD
+    lanes, partitions replace the reference's scoped threads:
+    src/one_shot/parallel/mod.rs:19-46);
+  - fuzzy_match(df, needle) — fuzzy_join with one needle; the final
+    sort/limit is ordinary Catalyst (``orderBy`` replaces the
+    reference's rayon parallel sort).
 
 Pipeline stages inside a batch (mirrors matcher.rs:91-144): min-length
 filter -> char-count prefilter over a per-batch byte histogram -> greedy
@@ -464,62 +466,20 @@ def fuzzy_match(
     limit: int | None = None,
     route: str = "auto",
 ):
-    """Distributed one-needle-vs-table fuzzy match.
+    """Distributed one-needle-vs-table fuzzy match: :func:`fuzzy_join`
+    with one needle, best-first when ``config.sort``. Result columns:
+    ``id_cols + [score, typos, exact]``.
 
-    Arrow batches inside ``mapInPandas`` play the reference's SIMD-lane
-    role; Spark partitions play its scoped threads (parallel/mod.rs:50-129
-    — global ids survive because they are columns, not positions). Result
-    columns: ``id_cols + [score, typos, exact]``, best-first when sorted.
-
-    The min-length filter is applied as a *Catalyst* predicate first so it
-    pushes into the scan; the prefilter + DP run in the UDF. ``route``
-    overrides the cost-based kernel choice (see match_list_arrays) —
-    "greedy" is the long-document scale path and has a pure-SQL oracle in
-    the driver contract.
+    ``route`` overrides the cost-based kernel choice (see
+    match_list_arrays) — "greedy" is the long-document scale path and
+    has a pure-SQL oracle in the driver contract.
     """
     from pyspark.sql import functions as F
 
     id_cols = id_cols or ["doc_id"]
-    cfg = config
-    nb = needle
-
-    work = df.select(*id_cols, text_col)
-    if cfg.max_typos is not None and len(needle) > 0:
-        min_len = max(0, len(needle.encode()) - cfg.max_typos)
-        if min_len > 0:
-            # min_len is in BYTES (the DP kernel is byte-oriented), so the
-            # pushed predicate must compare bytes too: octet_length, not
-            # length (chars) — a multi-byte doc can have octets >= min_len
-            # but chars < min_len and must NOT be pruned
-            work = work.filter(F.octet_length(F.col(text_col)) >= min_len)
-    # widen AFTER the filter so the length predicate still pushes into the
-    # scan; a one-file input otherwise runs the whole DP on one core
-    from ..util import widen_if_narrow
-
-    work = widen_if_narrow(work)
-
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in work.schema.fields if f.name != text_col
-    )
-    schema = f"{out_fields}, score long, typos long, exact boolean"
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            texts = [
-                t.encode("utf-8", "surrogatepass") if isinstance(t, str) else (t or b"")
-                for t in pdf[text_col].tolist()
-            ]
-            pos, scores, typos, exact = match_list_arrays(nb, texts, cfg, route=route)
-            out = pdf.iloc[pos].drop(columns=[text_col]).reset_index(drop=True)
-            out["score"] = scores
-            out["typos"] = typos
-            out["exact"] = exact
-            yield out
-
-    result = work.mapInPandas(run, schema=schema)
-    if cfg.sort:
+    result = fuzzy_join(df, [(0, needle)], text_col, id_cols, config,
+                        route=route).drop("needle_id")
+    if config.sort:
         order = [F.desc("score")] + [F.asc(c) for c in id_cols]
         result = result.orderBy(*order)
         if limit is not None:
@@ -550,7 +510,9 @@ def fuzzy_join(
     every needle against one byte histogram of the batch and scores the
     survivors of all needles per length bucket in one DP call, so the
     cost is O(|needles| * corpus) kernel work with zero extra scans or
-    shuffles.
+    shuffles. Arrow batches play the reference's SIMD-lane role; Spark
+    partitions play its scoped threads (parallel/mod.rs:50-129 — global
+    ids survive because they are columns, not positions).
 
     Catalyst pushdown: with a typo budget, docs shorter than
     min(len(needle) - max_typos) over the needle set can match nothing —
@@ -595,10 +557,13 @@ def fuzzy_join(
             max(0, len(ns.encode()) - cfg.max_typos) for _, ns in pairs
         )
         if min_len > 0:
-            # bytes-vs-bytes: see fuzzy_match — octet_length matches the
-            # byte-oriented min_len, length (chars) can wrongly prune
-            # multi-byte docs
+            # min_len is in BYTES (the DP kernel is byte-oriented), so the
+            # pushed predicate must compare bytes too: octet_length, not
+            # length (chars) — a multi-byte doc can have octets >= min_len
+            # but chars < min_len and must NOT be pruned
             work = work.filter(F.octet_length(F.col(text_col)) >= min_len)
+    # widen AFTER the filter so the length predicate still pushes into the
+    # scan; a one-file input otherwise runs the whole DP on one core
     from ..util import widen_if_narrow
 
     work = widen_if_narrow(work)

@@ -197,7 +197,6 @@ class PipelineConfig:
                                         # documents checkpoint; default is
                                         # no shuffle (scan-split order) —
                                         # see the comment in s_documents
-    pair_partitions: int | None = None  # repartition before verify
     checkpoint_stages: tuple = DEFAULT_CHECKPOINTS
 
 
@@ -967,11 +966,15 @@ class NearDupPipeline:
                                              "span_pairs"):
             import concurrent.futures
 
-            # span_report depends only on (documents, span_pairs), so it
+            # span_report (the shared-boilerplate block report: witness
+            # grams of confirmed span pairs extended to maximal
+            # byte-identical extents; it stays out of clustering, like
+            # span_pairs) depends only on (documents, span_pairs), so it
             # chains on the SAME side thread and overlaps the SW verify —
             # running it after `verified` on the main thread measured +9s
             # of serial wall at bench scale. Skipped when `until` stops
-            # at `verified` (its block below never runs there either).
+            # at `verified`; for every later `until` this chain is the
+            # one place span_report is built.
             chain_report = until != "verified"
 
             def _span_chain():
@@ -1058,10 +1061,7 @@ class NearDupPipeline:
 
             verified = self._stage(
                 "verified",
-                lambda: verify_pairs(
-                    candidates, documents, d,
-                    num_partitions=cfg.pair_partitions, signatures=signatures,
-                ),
+                lambda: verify_pairs(candidates, documents, d),
             )
             out["verified"] = verified
         finally:
@@ -1077,21 +1077,6 @@ class NearDupPipeline:
         if until == "verified":
             return stop()
 
-        # span_report: the shared-boilerplate block deliverable — witness
-        # grams of confirmed span pairs extended to maximal byte-identical
-        # extents (offsets + length per pair). Stays OUT of clustering,
-        # like span_pairs itself.
-        if cfg.enable_span and "span_pairs" in out and "span_report" not in out:
-            # sequential fallback (the concurrent branch normally chains
-            # span_report; this path serves `until`-interrupted resumes)
-            sp = out["span_pairs"]
-            if "a_off" not in sp.columns:
-                # resumed from a pre-witness span_pairs checkpoint
-                sp = winnow_span_pairs(documents, d, keep_witness=True)
-            out["span_report"] = self._stage(
-                "span_report",
-                lambda: span_extents(documents, d, span_pairs=sp),
-            )
         if until == "span_report":
             return stop()
 

@@ -78,10 +78,11 @@ def incremental_dedup_batch(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Delta step: returns (new_signatures, candidate_pairs, all_signatures).
 
-    Candidates cover new-vs-new AND new-vs-existing pairs; existing-vs-
-    existing is never recomputed (the incremental-matcher property).
-    They pass the batch Hamming gate and degree cap over all signatures.
-    Callers verify with :func:`verify_increment`.
+    Candidates ``(a, b, exact)`` cover new-vs-new AND new-vs-existing
+    pairs; existing-vs-existing is never recomputed (the
+    incremental-matcher property). They pass the batch Hamming gate and
+    degree cap over all signatures, which tags exact duplicates. Callers
+    verify with :func:`verify_increment`.
     """
     new_sigs = compute_signatures(new_docs, cfg, id_col=id_col, text_col=text_col)
     all_sigs = (
@@ -95,13 +96,15 @@ def incremental_dedup_batch(
 def verify_increment(
     cand: DataFrame,
     docs_lookup: DataFrame,
-    all_sigs: DataFrame,
+    all_sigs: DataFrame | None = None,
     cfg: DedupConfig = DEFAULT_DEDUP,
     text_col: str = "norm_text",
 ) -> DataFrame:
-    """Verify increment candidates against the full doc lookup table."""
-    return verify_pairs(cand, docs_lookup, cfg, text_col=text_col,
-                        signatures=all_sigs).filter("verified").select("a", "b")
+    """Verify increment candidates against the full doc lookup table.
+    ``all_sigs`` is not read (the candidates carry the gate's exact
+    tag); it stays so that callers that still pass it keep working."""
+    return verify_pairs(cand, docs_lookup, cfg, text_col=text_col) \
+        .filter("verified").select("a", "b")
 
 
 def _read_state(s, path: str, exclude_batch: int):
@@ -180,9 +183,10 @@ def make_batch_processor(spark, state_dir: str, cfg: DedupConfig = DEFAULT_DEDUP
         try:
             _process_batch_inner(batch_df, batch_id)
         finally:
-            # verify_pairs persists its tag table per call; a stream runs
-            # this every micro-batch, so without a per-batch release the
-            # CacheManager grows unboundedly for the stream's lifetime
+            # the candidate gate persists its gated pairs per call; a
+            # stream runs this every micro-batch, so without a per-batch
+            # release the CacheManager grows unboundedly for the stream's
+            # lifetime
             release_tracked()
 
     def _process_batch_inner(batch_df: DataFrame, batch_id: int) -> None:
@@ -191,13 +195,13 @@ def make_batch_processor(spark, state_dir: str, cfg: DedupConfig = DEFAULT_DEDUP
             "doc_id", "url", "norm_text"
         )
         existing = _read_state(s, sig_path, batch_id)
-        new_sigs, cand, all_sigs = incremental_dedup_batch(new_docs, existing, cfg)
+        new_sigs, cand, _ = incremental_dedup_batch(new_docs, existing, cfg)
 
         old_docs = _read_state(s, docs_path, batch_id)
         lookup = new_docs.select("doc_id", "norm_text")
         if old_docs is not None:
             lookup = lookup.unionByName(old_docs.select("doc_id", "norm_text"))
-        edges = verify_increment(cand, lookup, all_sigs, cfg)
+        edges = verify_increment(cand, lookup, cfg=cfg)
 
         # idempotent per-batch overwrites (replay-safe, see docstring)
         sub = f"batch_id={batch_id}"

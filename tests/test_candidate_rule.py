@@ -79,7 +79,8 @@ def increments(corpus):
             "new": {d for d, p in part_of.items() if p == part},
             "pairs": {tuple(r) for r in
                       _increment_pairs(new_sigs, existing).collect()},
-            "cand": {tuple(r) for r in cand.collect()},
+            "cand": {tuple(r) for r in cand.select("a", "b").collect()},
+            "exact": {(r["a"], r["b"]): r["exact"] for r in cand.collect()},
         })
         release_tracked()
     return out
@@ -144,3 +145,51 @@ class TestOneCandidateRule:
         assert len(batch) == N_DOCS
         assert len({c for _, c in batch}) < N_DOCS  # there are clusters
         assert streamed == batch
+
+
+def _join_nodes(df):
+    tree = df._jdf.queryExecution().analyzed().treeString()
+    return sum(1 for line in tree.splitlines() if "Join " in line)
+
+
+@pytest.mark.spark
+class TestGateTag:
+    """The candidate gate decides exact and Hamming once; verify reads its
+    ``exact`` tag instead of joining the signatures again."""
+
+    def test_candidates_carry_exact_tag(self, corpus, increments):
+        _, sigs = corpus
+        text_hash = dict(sigs.select("doc_id", "text_hash").collect())
+        tags = {(r["a"], r["b"]): r["exact"]
+                for r in unified_candidate_pairs(sigs).collect()}
+        release_tracked()
+        for inc in increments:
+            tags.update(inc["exact"])
+        assert any(tags.values()) and not all(tags.values())
+        for (a, b), exact in tags.items():
+            assert exact == (text_hash[a] == text_hash[b])
+
+    def test_tagged_verify_equals_untagged(self, corpus):
+        docs, sigs = corpus
+        docs = docs.select("doc_id", "norm_text")
+        cand = unified_candidate_pairs(sigs)
+        cols = ["a", "b", "score", "similarity", "exact", "verified"]
+        tagged = _digest(verify_pairs(cand, docs), cols)
+        untagged = _digest(verify_pairs(cand.select("a", "b"), docs), cols)
+        n_exact = verify_pairs(cand, docs).filter("exact").count()
+        release_tracked()
+        assert n_exact > 0
+        assert tagged == untagged
+
+    def test_verify_joins_no_signatures(self, corpus):
+        """The analyzed plan holds the gate's two signature joins once per
+        branch of the degree cap's union, plus verify's two text joins.
+        Before verify read the tag, this call's plan had 20 Join nodes:
+        verify joined both endpoints' signatures again, and the analyzed
+        tree repeats that subtree in each of its three union branches."""
+        docs, sigs = corpus
+        docs = docs.select("doc_id", "norm_text")
+        cand = unified_candidate_pairs(sigs)
+        assert _join_nodes(cand) == 4
+        assert _join_nodes(verify_pairs(cand, docs, signatures=sigs)) == 6
+        release_tracked()

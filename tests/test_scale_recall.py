@@ -3,7 +3,7 @@
 - typo-budget parity fuzz: the batched wavefront's typo counts equal the
   scalar oracle's on 1k seeded random pairs, hence the budget filter
   keeps identical sets under EVERY max_typos — the tie-break-order claim
-  at wavefront.py:_typos_batch is load-bearing for recall parity with
+  at wavefront.py:_typos_skewed is load-bearing for recall parity with
   the reference (typos.rs:59-76);
 - giant-dup-family connectivity at 400k docs: a planted 10k-member
   exact+near family must land in ONE cluster end-to-end (signatures ->
