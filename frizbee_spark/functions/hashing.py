@@ -80,14 +80,9 @@ def hash64_batch(blobs: list[bytes]) -> np.ndarray:
     starts = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=starts[1:])
 
-    d0 = 0
     with np.errstate(over="ignore"):
-        while d0 < n:
-            d1 = d0 + 1
-            b0 = int(starts[d0])
-            while d1 < n and int(starts[d1 + 1]) - b0 <= _SHINGLE_CHUNK:
-                d1 += 1
-            b1 = int(starts[d1])
+        for d0, d1 in _doc_chunks(starts, _SHINGLE_CHUNK):
+            b0, b1 = int(starts[d0]), int(starts[d1])
             m = b1 - b0
             pows, invpows = _pow_tables(m)
             chunk = buf[b0:b1].astype(_U64)
@@ -98,7 +93,6 @@ def hash64_batch(blobs: list[bytes]) -> np.ndarray:
             e_local = starts[d0 + 1 : d1 + 1] - b0
             raw = (prefix[e_local] - prefix[s_local]) * invpows[s_local]
             out[d0:d1] = splitmix64(raw ^ lens[d0:d1].astype(_U64))
-            d0 = d1
     return out
 
 
@@ -139,6 +133,22 @@ def concat_docs(texts: list[bytes], min_len: int = 1) -> tuple[np.ndarray, np.nd
 _POW_CACHE: dict[str, np.ndarray] = {}
 _SHINGLE_CHUNK = 1 << 16  # bytes per chunk; per-pass temporaries stay L2-resident
 # per core even under full task concurrency (measured 3.5x on 32 procs)
+
+
+def _doc_chunks(starts: np.ndarray, limit: int, max_docs: int | None = None):
+    """Doc-aligned chunks ``(d0, d1)`` over CSR offsets ``starts``: each
+    spans at most ``limit`` elements (a lone larger doc is its own chunk)
+    and at most ``max_docs`` docs."""
+    n = starts.size - 1
+    d0 = 0
+    while d0 < n:
+        d1 = d0 + 1
+        b0 = int(starts[d0])
+        while (d1 < n and (max_docs is None or d1 - d0 < max_docs)
+               and int(starts[d1 + 1]) - b0 <= limit):
+            d1 += 1
+        yield d0, d1
+        d0 = d1
 
 
 def _pow_tables(n: int) -> tuple[np.ndarray, np.ndarray]:
@@ -187,18 +197,12 @@ def char_shingle_hashes(
     total = int(sh_starts[-1])
     out = np.empty(total, dtype=_U64)
 
-    ndocs = doc_lens.size
     pows, invpows = _pow_tables(int(doc_lens.max()))
     prefix_buf = np.empty(min(n, _SHINGLE_CHUNK + int(doc_lens.max())) + 1, dtype=_U64)
 
-    d0 = 0
     with np.errstate(over="ignore"):
-        while d0 < ndocs:
-            d1 = d0 + 1
-            b0 = int(doc_starts[d0])
-            while d1 < ndocs and int(doc_starts[d1 + 1]) - b0 <= _SHINGLE_CHUNK:
-                d1 += 1
-            b1 = int(doc_starts[d1])
+        for d0, d1 in _doc_chunks(doc_starts, _SHINGLE_CHUNK):
+            b0, b1 = int(doc_starts[d0]), int(doc_starts[d1])
             m = b1 - b0
             if prefix_buf.size < m + 1:
                 prefix_buf = np.empty(m + 1, dtype=_U64)
@@ -216,7 +220,6 @@ def char_shingle_hashes(
             pos = np.repeat(doc_starts[d0:d1] - b0, c) + local
             raw = (prefix[pos + k] - prefix[pos]) * invpows[pos]
             out[s0:s1] = splitmix64(raw)
-            d0 = d1
     return out, sh_starts
 
 
@@ -229,135 +232,40 @@ def minhash_signatures(
     shingle_starts: np.ndarray,
     num_perm: int = 128,
     seed: int = 1,
-    method: str = "oph",
 ) -> np.ndarray:
-    """(ndocs, num_perm) uint64 MinHash signatures.
+    """(ndocs, num_perm) uint64 one-permutation MinHash signatures.
 
-    ``method="oph"`` (default, the scale path): one-permutation hashing
-    with rotation densification (Li et al., NIPS'12; Shrivastava & Li,
-    ICML'14 — public algorithms). Each shingle lands in bin
-    ``h >> (64-log2(num_perm))`` and the per-(doc, bin) minimum of the
-    next ``_OPH_VBITS`` hash bits is the signature slot; empty bins
-    borrow (remixed) from the nearest filled bin. ONE pass over the
-    shingles instead of ``num_perm`` — this is what makes the stage
-    compute-bound instead of DRAM-bound: the k-permutation variant moves
+    One-permutation hashing with rotation densification (Li et al.,
+    NIPS'12; Shrivastava & Li, ICML'14 — public algorithms). Each shingle
+    lands in bin ``h >> (64-log2(num_perm))`` and the per-(doc, bin)
+    minimum of the next ``_OPH_VBITS`` hash bits is the signature slot;
+    empty bins borrow (remixed) from the nearest filled bin. ONE pass over
+    the shingles instead of ``num_perm`` — this is what makes the stage
+    compute-bound instead of DRAM-bound: a k-permutation family moves
     ~3 KB of memory per input byte (measured: 32-core aggregate
     throughput 5x lower than 8-core x4 on one machine), OPH moves ~30 B.
 
-    ``method="perm"`` is the classic independent-permutation family
-    (multiply-add per permutation, min via ``reduceat``) — kept as the
-    differential baseline for the estimator tests.
-
-    Both are fixed seeded families, identical on every executor, and
-    per-doc deterministic (invariant to batch/chunk boundaries).
+    A fixed seeded family, identical on every executor, and per-doc
+    deterministic (invariant to batch/chunk boundaries). The per-chunk
+    core is :func:`_oph_chunk`, shared with
+    :func:`compute_signature_arrays`.
     """
-    if method not in ("oph", "perm"):
-        # signatures from different families are band-incompatible — a
-        # typo silently destroying LSH recall must fail loudly
-        raise ValueError(f"minhash_signatures: unknown method {method!r}")
     ndocs = shingle_starts.size - 1
     sig = np.empty((ndocs, num_perm), dtype=_U64)
     if ndocs == 0:
         return sig
-    if method == "oph":
-        return _minhash_oph(shingle_hashes, shingle_starts, num_perm, seed)
-
-    # permutation p applies h -> a_p * h + b_p (mod 2^64, a_p odd): the
-    # classic multiply-add universal family. One multiply + one add per
-    # element instead of a full finalizer — the min is decided by the
-    # well-mixed high bits of the product. (shingle_hashes are already
-    # splitmix64-finalized, so input bits are uniform.)
-    seed_off = _U64((seed * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
-    with np.errstate(over="ignore"):
-        pidx = np.arange(num_perm, dtype=_U64)
-        A = splitmix64(pidx + seed_off) | _U64(1)  # odd multipliers
-        B = splitmix64(pidx ^ _U64(0xDEADBEEFCAFE) ^ seed_off)
-
-    # chunk by docs so the working set (shingles + product buffer) stays
-    # cache-resident while all num_perm passes reuse it — this is the
-    # difference between DRAM-bound and L2-bound (~5-10x wall)
-    total = shingle_hashes.size
-    chunk_target = 1 << 18  # shingles per chunk (~2 MB of uint64)
-    buf = np.empty(min(total, chunk_target * 2), dtype=_U64)
-    d0 = 0
-    with np.errstate(over="ignore"):
-        while d0 < ndocs:
-            d1 = d0 + 1
-            s0 = int(shingle_starts[d0])
-            while d1 < ndocs and int(shingle_starts[d1 + 1]) - s0 <= chunk_target:
-                d1 += 1
-            s1 = int(shingle_starts[d1])
-            hc = shingle_hashes[s0:s1]
-            local_starts = (shingle_starts[d0:d1] - s0).astype(np.int64)
-            if buf.size < hc.size:
-                buf = np.empty(hc.size, dtype=_U64)
-            bv = buf[: hc.size]
-            for p in range(num_perm):
-                np.multiply(hc, A[p], out=bv)
-                bv += B[p]
-                sig[d0:d1, p] = np.minimum.reduceat(bv, local_starts)
-            d0 = d1
-    return sig
-
-
-def _minhash_oph(
-    shingle_hashes: np.ndarray,
-    shingle_starts: np.ndarray,
-    num_perm: int,
-    seed: int,
-) -> np.ndarray:
-    """One-permutation MinHash: sort-free-ish single pass (see caller doc).
-
-    Layout trick: one uint64 sort key per shingle packs
-    ``(doc_local * num_perm + bin) << VBITS | value`` so a single
-    ``np.sort`` + group-first-occurrence yields every (doc, bin) minimum.
-    VBITS is fixed (not chunk-dependent) so results are invariant to
-    chunking. Chunks are capped so the packed doc*bin index fits.
-    """
     bits = int(num_perm).bit_length() - 1
     if (1 << bits) != num_perm:
         raise ValueError(f"num_perm must be a power of two, got {num_perm}")
-    ndocs = shingle_starts.size - 1
-    vshift = _U64(64 - _OPH_VBITS)
-    vmask = (_U64(1) << _U64(_OPH_VBITS)) - _U64(1)
-    sig = np.empty((ndocs, num_perm), dtype=_U64)
     # seed folds into the binning/value remix so different seeds give
     # independent families
     sseed = splitmix64(_U64(seed) ^ _U64(0x0F1E2D3C4B5A6978))
-
-    max_docs_per_chunk = max((1 << (64 - _OPH_VBITS)) // num_perm, 1)
-    counts = np.diff(shingle_starts)
-    d0 = 0
+    max_docs = max((1 << (64 - _OPH_VBITS)) // num_perm, 1)
     with np.errstate(over="ignore"):
-        while d0 < ndocs:
-            d1 = d0 + 1
-            s0 = int(shingle_starts[d0])
-            while (
-                d1 < ndocs
-                and d1 - d0 < max_docs_per_chunk
-                and int(shingle_starts[d1 + 1]) - s0 <= _SHINGLE_CHUNK
-            ):
-                d1 += 1
-            s1 = int(shingle_starts[d1])
-            h = splitmix64(shingle_hashes[s0:s1] ^ sseed)
-            nbin = (h >> _U64(64 - bits)) if bits else np.zeros(h.size, dtype=_U64)
-            # value = the VBITS hash bits just below the bin bits
-            value = ((h << _U64(bits)) >> vshift) & vmask
-            doc_local = np.repeat(
-                np.arange(d1 - d0, dtype=_U64), counts[d0:d1]
-            )
-            key = ((doc_local * _U64(num_perm) + nbin) << _U64(_OPH_VBITS)) | value
-            key = np.sort(key)
-            comb = key >> _U64(_OPH_VBITS)
-            first = np.empty(key.size, dtype=bool)
-            first[0] = True
-            first[1:] = comb[1:] != comb[:-1]
-            slots = np.full((d1 - d0) * num_perm, _OPH_EMPTY, dtype=_U64)
-            slots[comb[first].astype(np.int64)] = key[first] & vmask
-            slots = slots.reshape(d1 - d0, num_perm)
-            _densify_rotation(slots)
-            sig[d0:d1] = slots
-            d0 = d1
+        for d0, d1 in _doc_chunks(shingle_starts, _SHINGLE_CHUNK, max_docs):
+            s0, s1 = int(shingle_starts[d0]), int(shingle_starts[d1])
+            _oph_chunk(splitmix64(shingle_hashes[s0:s1] ^ sseed),
+                       shingle_starts[d0:d1] - s0, num_perm, bits, sig[d0:d1])
     return sig
 
 
@@ -387,8 +295,14 @@ def _oph_chunk(
     h: np.ndarray, local_starts: np.ndarray, num_perm: int, bits: int,
     sig_out: np.ndarray,
 ) -> None:
-    """OPH core for one doc-aligned chunk (see _minhash_oph). ``h`` must
-    already be remixed; writes (len(local_starts), num_perm) into sig_out."""
+    """OPH core for one doc-aligned chunk (see :func:`minhash_signatures`).
+
+    One uint64 sort key per shingle packs ``(doc_local * num_perm + bin)
+    << VBITS | value``, so a single ``np.sort`` + group-first-occurrence
+    yields every (doc, bin) minimum. VBITS is fixed (not chunk-dependent)
+    so results are invariant to chunking; callers cap a chunk's docs so
+    the packed doc*bin index fits. ``h`` must already be remixed; writes
+    (len(local_starts), num_perm) into sig_out."""
     vshift = _U64(64 - _OPH_VBITS)
     vmask = (_U64(1) << _U64(_OPH_VBITS)) - _U64(1)
     counts = np.diff(np.append(local_starts, h.size))
@@ -472,18 +386,9 @@ def compute_signature_arrays(
     pows, invpows = _pow_tables(int(doc_lens.max()))
     max_docs = max((1 << (64 - _OPH_VBITS)) // num_perm, 1)
 
-    d0 = 0
     with np.errstate(over="ignore"):
-        while d0 < ndocs:
-            d1 = d0 + 1
-            b0 = int(starts[d0])
-            while (
-                d1 < ndocs
-                and d1 - d0 < max_docs
-                and int(starts[d1 + 1]) - b0 <= _SHINGLE_CHUNK
-            ):
-                d1 += 1
-            b1 = int(starts[d1])
+        for d0, d1 in _doc_chunks(starts, _SHINGLE_CHUNK, max_docs):
+            b0, b1 = int(starts[d0]), int(starts[d1])
             m = b1 - b0
             # shingle hashes for this chunk (origin-invariant prefix sums,
             # same derivation as char_shingle_hashes)
@@ -506,7 +411,6 @@ def compute_signature_arrays(
             _oph_chunk(splitmix64(sh ^ sseed), local_sh_starts, num_perm,
                        bits, sig[d0:d1])
             _simhash_chunk(sh, local_sh_starts, simh[d0:d1])
-            d0 = d1
 
     out = (band_hashes(sig, bands, band_rows), simh.view(np.int64))
     if short_tier is not None:
@@ -541,32 +445,14 @@ def simhash64(shingle_hashes: np.ndarray, shingle_starts: np.ndarray) -> np.ndar
     reference's bitmask prefilter (bitmask.rs:14-61) — compared later by
     Hamming distance, not equality.
     """
-    ndocs = shingle_starts.size - 1
-    if ndocs == 0:
-        return np.empty(0, dtype=np.int64)
-    counts = np.diff(shingle_starts)
-    out = np.zeros(ndocs, dtype=_U64)
-    one = _U64(1)
+    out = np.zeros(shingle_starts.size - 1, dtype=_U64)
     # doc-aligned chunks sized so the 64 bit-pass temporaries stay
     # L2-resident per core (512 KB at 1<<16 shingles): measured 2.6x
-    # faster than the 2 MB chunks under 32-way task concurrency, because
-    # the per-pass temp arrays otherwise round-trip shared DRAM
-    chunk_target = 1 << 16
-    d0 = 0
-    while d0 < ndocs:
-        d1 = d0 + 1
-        s0 = int(shingle_starts[d0])
-        while d1 < ndocs and int(shingle_starts[d1 + 1]) - s0 <= chunk_target:
-            d1 += 1
-        s1 = int(shingle_starts[d1])
-        hc = shingle_hashes[s0:s1]
-        local_starts = (shingle_starts[d0:d1] - s0).astype(np.int64)
-        c = counts[d0:d1]
-        acc = out[d0:d1]
-        for j in range(64):
-            bitsum = np.add.reduceat((hc >> _U64(j)) & one, local_starts)
-            acc |= ((2 * bitsum > c).astype(_U64)) << _U64(j)
-        d0 = d1
+    # faster than 2 MB chunks under 32-way task concurrency, because the
+    # per-pass temp arrays otherwise round-trip shared DRAM
+    for d0, d1 in _doc_chunks(shingle_starts, _SHINGLE_CHUNK):
+        s0, s1 = int(shingle_starts[d0]), int(shingle_starts[d1])
+        _simhash_chunk(shingle_hashes[s0:s1], shingle_starts[d0:d1] - s0, out[d0:d1])
     return out.view(np.int64)
 
 

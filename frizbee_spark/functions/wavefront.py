@@ -4,33 +4,30 @@ This is the engine's hot path: it scores a *batch* of (needle, haystack)
 pairs at once with NumPy, iterating over anti-diagonals (cells i+j = d) so
 that every cell on a diagonal — across the whole batch — updates in one
 vectorized step. The Arrow batch handed to a pandas UDF plays the role the
-interleaved SIMD lanes play in the reference design
-(/root/reference/src/smith_waterman/simd/algorithm.rs:129-200,
- interleave/mod.rs:10-34): rows of the batch are lanes, NumPy is the SIMD.
+interleaved SIMD lanes play in frizbee's SIMD pass
+(src/smith_waterman/simd/algorithm.rs:129-200, interleave/mod.rs:10-34):
+rows of the batch are lanes, NumPy is the SIMD.
 
-Both DP kernels are POSITION-MAJOR: operands are ``(position, lane)``
-arrays with the haystack side reversed, so every diagonal's operands are
-contiguous row slices and each ufunc runs over the whole batch at once.
+There is one DP kernel, :func:`sw_batch`. Operands are POSITION-MAJOR,
+``(position, lane)`` arrays with the haystack side reversed, so every
+diagonal's operands are contiguous row slices and each ufunc runs over
+the whole batch at once. It serves both workloads:
 
-- :func:`sw_batch` — full (unbanded) matrices, plus a vectorized typo
-  traceback. Used by the fuzzy matcher on short strings (<= 512 bytes,
-  same routing cap as the reference: src/one_shot/mod.rs:20-25). Each
-  lane carries its own needle, so the matcher scores the rows of every
-  needle in one length bucket with one call. H is stored skewed,
-  ``S[d + 2, i + 1, lane] = H(i, d - i)``, which makes the diag, up and
-  left inputs of a diagonal plain slices of the two before it; only the
-  previous diagonal's gap flags are kept, and the traceback
-  (:func:`_typos_skewed`) walks ``S`` directly. Must be bit-identical to
-  the scalar oracle (tests are differential).
-
-- :func:`sw_score_banded` — O(len * band) rolling-buffer kernel for long
-  documents: only cells with |j - i| <= band_radius are computed (the
-  banding idea of src/smith_waterman/simd/algorithm.rs:144-160 scaled to
-  document length). Returns raw scores; similarity normalization lives in
+- the fuzzy matcher: full matrices on short strings (<= 512 bytes, the
+  reference's routing cap, src/one_shot/mod.rs:20-25) plus a vectorized
+  typo traceback (:func:`_typos_skewed`). Each lane carries its own
+  needle, so the matcher scores the rows of every needle in one length
+  bucket with one call. Must be bit-identical to the scalar oracle
+  (tests are differential).
+- dedup verify: ``band_radius`` clips each diagonal to |j - i| <= R, the
+  banding of src/smith_waterman/simd/algorithm.rs:144-160 scaled to
+  document length. :func:`sw_score_banded` is that call without the
+  exact-match bonus; similarity normalization lives in
   :func:`normalized_similarity`.
 
-Scores are computed in int32/int64 with explicit clamping at zero
-(NumPy wraps; the reference relies on u16 saturating arithmetic).
+Scores use int16 when no cell can overflow it, else int32, with explicit
+clamping at zero (NumPy wraps; the reference relies on u16 saturating
+arithmetic).
 """
 
 from __future__ import annotations
@@ -103,25 +100,38 @@ def sw_batch(
     haystacks: list[bytes],
     scoring: Scoring = DEFAULT_SCORING,
     compute_typos: bool = True,
+    band_radius: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Score a batch of (needle, haystack) lanes with full DP matrices.
+    """Score a batch of (needle, haystack) lanes, optionally banded.
 
     Every lane carries its own needle, so one call can score many needles
     against their candidate rows at once. Returns ``(scores, typos,
     exact)`` — int64 scores (exact-match bonus included), int64 typo
     counts (-1 when ``compute_typos`` is False), bool exact flags.
-    Semantics match the scalar oracle cell-for-cell.
+    Unbanded, semantics match the scalar oracle cell-for-cell.
+
+    ``band_radius=R`` computes only cells with ``|j - i| <= R``; every
+    cell outside the band is an implicit zero, which local alignment
+    makes a safe truncation for near-duplicates, whose optimal path hugs
+    the diagonal. The band is a clip of each diagonal's row range, and
+    the loop stops once the band has left the matrix.
 
     Layout: operands are position-major ``(position, lane)`` with the
-    haystack side reversed, as in :func:`sw_score_banded`, and H is
-    stored skewed, ``S[d + 2, i + 1, lane] = H(i, d - i)``: the diag, up
-    and left inputs of diagonal ``d`` are then row slices of diagonals
-    ``d - 2`` and ``d - 1``. Row ``d + 2`` is written once; slot 0 and
-    every cell outside a diagonal's window stay zero, which is the
-    padding the recurrence reads at ``i = -1`` and ``j = -1``. Only the
-    previous diagonal's gap flags are kept. The typo traceback walks
-    ``S`` directly (:func:`_typos_skewed`); without it only the last
-    three diagonals are held.
+    haystack side reversed, and H is stored skewed, ``S[d + 2, i + 1,
+    lane] = H(i, d - i)``: the diag, up and left inputs of diagonal ``d``
+    are then row slices of diagonals ``d - 2`` and ``d - 1``. Row
+    ``d + 2`` is written once; slot 0 and every cell outside a diagonal's
+    window stay zero, which is the padding the recurrence reads at
+    ``i = -1``, ``j = -1`` and outside the band. Only the previous
+    diagonal's gap flags are kept. The typo traceback walks ``S``
+    directly (:func:`_typos_skewed`); without it only the last three
+    diagonals are held. A band's row range never moves backwards, so the
+    three-row ring only ever reads slots that the diagonal before wrote
+    or zeroed.
+
+    When neither side holds an ASCII capital, every case-folded match is
+    also a raw match: the matching-case bonus folds into the static
+    bonus and the per-cell raw-byte compare is skipped.
     """
     assert len(needles) == len(haystacks)
     bsz = len(needles)
@@ -132,26 +142,31 @@ def sw_batch(
     ns, nlens = _pad_bytes(needles)
     hs, wlens = _pad_bytes(haystacks)
     n_max, w_max = ns.shape[1], hs.shape[1]
+    R = n_max + w_max if band_radius is None else int(band_radius)
     dtype = _score_dtype(min(n_max, w_max), scoring)
 
-    n_low = _char_classes(ns, scoring.delimiters)[0]
+    n_low, n_upper = _char_classes(ns, scoring.delimiters)[:2]
     h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
     delim_bonus, cap_bonus = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
     h0_nonalpha = ~((hs[:, 0] >= 65) & (hs[:, 0] <= 90)) & ~((hs[:, 0] >= 97) & (hs[:, 0] <= 122))
     h0_nonalpha &= wlens > 0
+    folded = not (n_upper.any() or h_upper.any())
 
     # position-major operands; haystack rows reversed so a diagonal's
     # haystack positions are a plain row range: rev[t] == orig[w_max-1-t].
     # On a case-folded match the matching-case bonus fires exactly when
     # the raw bytes are equal, so it needs one compare of the raw bytes.
     n_low_T = np.ascontiguousarray(n_low.T)
-    n_raw_T = np.ascontiguousarray(ns.T)
     n_valid_T = np.arange(n_max)[:, None] < nlens[None, :]
     h_low_rev_T = np.ascontiguousarray(h_low.T[::-1])
-    h_raw_rev_T = np.ascontiguousarray(hs.T[::-1])
     h_valid_rev_T = np.arange(w_max - 1, -1, -1)[:, None] < wlens[None, :]
-    static_rev_T = np.ascontiguousarray(
-        (delim_bonus + cap_bonus + scoring.match_score).T[::-1]).astype(dtype)
+    static = delim_bonus + cap_bonus + scoring.match_score
+    if folded:
+        static += scoring.matching_case_bonus
+    else:
+        n_raw_T = np.ascontiguousarray(ns.T)
+        h_raw_rev_T = np.ascontiguousarray(hs.T[::-1])
+    static_rev_T = np.ascontiguousarray(static.T[::-1]).astype(dtype)
 
     rows = n_max + w_max + 1 if compute_typos else 3
     slots = n_max + 1
@@ -163,7 +178,7 @@ def sw_batch(
     u_open = np.ones((slots, bsz), dtype=bool)
     l_open = np.ones((slots, bsz), dtype=bool)
 
-    bw = min(n_max, w_max)
+    bw = min(n_max, w_max, R + 1)
     sc = {k: np.empty((bw, bsz), dtype=dtype) for k in ("d1", "d2", "pen", "u", "l")}
     sc.update({k: np.empty((bw, bsz), dtype=bool) for k in ("m", "dt", "v")})
     best = np.zeros(bsz, dtype=dtype)
@@ -174,7 +189,11 @@ def sw_batch(
     min_n, min_w = int(nlens.min()), int(wlens.min())
 
     for d in range(n_max + w_max - 1):
-        i_lo, i_hi = max(0, d - w_max + 1), min(n_max - 1, d)
+        # band |j - i| <= R with j = d - i  =>  (d - R) / 2 <= i <= (d + R) / 2
+        i_lo = max(0, d - w_max + 1, (d - R + 1) // 2)
+        i_hi = min(n_max - 1, d, (d + R) // 2)
+        if i_lo > i_hi:
+            break  # the band has left the matrix; later diagonals are empty
         wd = i_hi - i_lo + 1
         r_lo = w_max - 1 - d + i_lo  # reversed haystack row of i_lo
         r_hi = r_lo + wd
@@ -188,9 +207,10 @@ def sw_batch(
         d1 = np.subtract(diag_in, mismatch, out=sc["d1"][:wd])
         np.maximum(d1, zero, out=d1)
         d2 = np.add(diag_in, static_rev_T[r_lo:r_hi], out=sc["d2"][:wd])
-        case_eq = np.equal(n_raw_T[i_lo:i_hi + 1], h_raw_rev_T[r_lo:r_hi],
-                           out=sc["m"][:wd])
-        np.add(d2, mcb, out=d2, where=case_eq)
+        if not folded:
+            case_eq = np.equal(n_raw_T[i_lo:i_hi + 1], h_raw_rev_T[r_lo:r_hi],
+                               out=sc["m"][:wd])
+            np.add(d2, mcb, out=d2, where=case_eq)
         # prefix / offset-prefix patches hit at most the last two cells
         # (j == 0 at i == d, j == 1 at i == d - 1)
         if i_hi == d:
@@ -310,220 +330,14 @@ def sw_score_banded(
     scoring: Scoring = DEFAULT_SCORING,
     assume_folded: bool = False,
 ) -> np.ndarray:
-    """Banded wavefront scores for long-document pairs, O(len * band).
-
-    Only cells with |j - i| <= band_radius are computed; everything
-    outside the band is an implicit zero (local alignment makes that a
-    safe truncation for near-duplicates, whose optimal path hugs the
-    diagonal). Rolling buffers hold just the last two diagonals — memory
-    is O(batch * max_len), not O(batch * len^2). No traceback.
-
-    Convention: `a` plays the needle (columns), `b` the haystack (rows).
-    The exact-match bonus is NOT added here (callers detect exactness by
-    hash equality first — same fast path as A4 in the survey).
-
-    ``assume_folded=True`` is the dedup-verify fast path: inputs are
-    already case-folded, so the matching-case bonus applies on every
-    match and constant-folds into the static bonus (two fewer passes per
-    cell), and int16 buffers are used when the maximum possible score
-    fits (halves memory traffic). The pipeline verifies normalized text,
-    so this is its default.
-    """
-    assert len(a_texts) == len(b_texts)
-    bsz = len(a_texts)
-    if bsz == 0:
-        return np.zeros(0, dtype=np.int64)
-
-    ns, nlens = _pad_bytes(a_texts)
-    hs, wlens = _pad_bytes(b_texts)
-    n_max, w_max = ns.shape[1], hs.shape[1]
-    R = int(band_radius)
-
-    n_low, n_upper, _, _ = _char_classes(ns, scoring.delimiters)
-    h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
-    delim_bonus, cap_bonus = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
-    dtype = (_score_dtype(int(min(nlens.max(), wlens.max())), scoring)
-             if assume_folded else np.int32)
-    # static on-match bonus per haystack position (path-independent);
-    # with folded input the matching-case bonus always fires -> fold it in
-    static_bonus = (
-        delim_bonus + cap_bonus + scoring.match_score
-        + (scoring.matching_case_bonus if assume_folded else 0)
-    ).astype(dtype)
-    h0_nonalpha = ~((hs[:, 0] >= 65) & (hs[:, 0] <= 90)) & ~((hs[:, 0] >= 97) & (hs[:, 0] <= 122))
-    h0_nonalpha &= wlens > 0
-
-    # POSITION-MAJOR layout (the reference's interleave insight, K6:
-    # interleave/mod.rs:10-34 — position i of all lanes contiguous): every
-    # per-diagonal operand below is a (band_width, bsz) slice whose inner
-    # axis is the whole batch, so each ufunc runs ~band_width long SIMD
-    # loops instead of bsz tiny ones. Measured ~4x over the batch-major
-    # layout at bsz=1024. Haystack-side rows are also pre-reversed so
-    # diagonal slices are plain row ranges: rev[t] == orig[w_max - 1 - t].
-    n_low_T = np.ascontiguousarray(n_low.T)
-    h_low_rev_T = np.ascontiguousarray(h_low.T[::-1])
-    static_bonus_rev_T = np.ascontiguousarray(static_bonus.T[::-1])
-    n_upper_i8_T = np.ascontiguousarray(n_upper.astype(np.int8).T)
-    h_upper_i8_rev_T = np.ascontiguousarray(h_upper.astype(np.int8).T[::-1])
-
-    # rolling buffers indexed by slot = i + 1 (slot 0 is a permanent zero);
-    # invariant: outside the diagonal's written window every H slot is zero
-    # and every gap-open mask slot is True (fresh gaps pay the open
-    # penalty, as at the start of every scalar column)
-    shape = (n_max + 2, bsz)
-    h_prev = np.zeros(shape, dtype=dtype)   # diag d-1
-    h_prev2 = np.zeros(shape, dtype=dtype)  # diag d-2
-    u_prev = np.ones(shape, dtype=bool)
-    l_prev = np.ones(shape, dtype=bool)
-    win_prev = (0, 0)   # written slot window [lo, hi) of diag d-1
-    win_prev2 = (0, 0)
-
-    best = np.zeros(bsz, dtype=dtype)
-    # dtype-scalar penalties keep every intermediate in the small dtype
-    go, ge = dtype(scoring.gap_open_penalty), dtype(scoring.gap_extend_penalty)
-    go_minus_ge = dtype(scoring.gap_open_penalty - scoring.gap_extend_penalty)
-    zero = dtype(0)
-    mcb = scoring.matching_case_bonus
-    mismatch = dtype(scoring.mismatch_penalty)
-    nlens_row = nlens[None, :]
-    wlens_row = wlens[None, :]
-    min_n, min_w = int(nlens.min()), int(wlens.min())
-    iv_all = np.arange(n_max, dtype=np.int64)
-
-    # preallocated per-diagonal scratch, sliced to the band width each
-    # round (avoids ~15 allocations per diagonal)
-    bw = min(R + 2, n_max) + 1
-    sc = {
-        "im": np.empty((bw, bsz), dtype=bool),
-        "dt": np.empty((bw, bsz), dtype=bool),
-        "v2": np.empty((bw, bsz), dtype=bool),
-        "un": np.empty((bw, bsz), dtype=bool),
-        "ln": np.empty((bw, bsz), dtype=bool),
-        "d1": np.empty((bw, bsz), dtype=dtype),
-        "d2": np.empty((bw, bsz), dtype=dtype),
-        "pen": np.empty((bw, bsz), dtype=dtype),
-        "u": np.empty((bw, bsz), dtype=dtype),
-        "l": np.empty((bw, bsz), dtype=dtype),
-        "mx": np.empty((bw, bsz), dtype=dtype),
-        "bo": np.empty((bw, bsz), dtype=dtype),
-    }
-
-    for d in range(n_max + w_max - 1):
-        # band |j - i| <= R with j = d - i  =>  (d - R) / 2 <= i <= (d + R) / 2
-        i_lo = max(0, d - w_max + 1, (d - R + 1) // 2)
-        i_hi = min(n_max - 1, d, (d + R) // 2)
-        if i_lo > i_hi:
-            break  # band has left the matrix; later diagonals are empty too
-        j_hi, j_lo = d - i_lo, d - i_hi  # j decreases as i increases
-        wd = i_hi - i_lo + 1
-
-        r_lo, r_hi = w_max - 1 - j_hi, w_max - j_lo
-        nl = n_low_T[i_lo : i_hi + 1]
-        hl = h_low_rev_T[r_lo:r_hi]
-        is_match = np.equal(nl, hl, out=sc["im"][:wd])
-        bonus = sc["bo"][:wd]
-        np.copyto(bonus, static_bonus_rev_T[r_lo:r_hi])
-        if not assume_folded:
-            np.equal(
-                n_upper_i8_T[i_lo : i_hi + 1], h_upper_i8_rev_T[r_lo:r_hi],
-                out=sc["v2"][:wd],
-            )
-            bonus += mcb * sc["v2"][:wd]
-
-        # prefix / offset-prefix patches hit at most the last two cells
-        # (j == 0 at i == d, j == 1 at i == d - 1)
-        if j_lo == 0:
-            bonus[-1] += scoring.prefix_bonus
-        if j_lo <= 1 <= j_hi:
-            # offset-prefix requires prev column's first cell == 0 and a
-            # non-alphabetic first haystack char (algorithm.rs:33-34)
-            col0_prev = h_prev2[d - 1] if d >= 1 else np.zeros(bsz, dtype=dtype)
-            bonus[(d - 1) - i_lo] += np.where(
-                (col0_prev == 0) & h0_nonalpha, scoring.offset_prefix_bonus, 0
-            ).astype(dtype)
-
-        diag_in = h_prev2[i_lo : i_hi + 1]
-        left_in = h_prev[i_lo : i_hi + 1]
-        up_in = h_prev[i_lo + 1 : i_hi + 2]
-        u_open = u_prev[i_lo + 1 : i_hi + 2]
-        l_open = l_prev[i_lo + 1 : i_hi + 2]
-
-        # diag_score -> d1: max(diag - mismatch, 0), overwritten with
-        # diag + bonus where the chars match
-        d1 = sc["d1"][:wd]
-        np.subtract(diag_in, mismatch, out=d1)
-        np.maximum(d1, zero, out=d1)
-        d2 = sc["d2"][:wd]
-        np.add(diag_in, bonus, out=d2)
-        np.copyto(d1, d2, where=is_match)
-
-        # out-of-band up/left neighbors carry score 0 by the buffer
-        # invariant; a zero minus any penalty clamps to 0, so no masking.
-        # penalty = ge + open_flag * (go - ge), computed in place
-        pen = sc["pen"][:wd]
-        np.multiply(u_open, go_minus_ge, out=pen, casting="unsafe")
-        pen += ge
-        up_score = sc["u"][:wd]
-        np.subtract(up_in, pen, out=up_score)
-        np.maximum(up_score, zero, out=up_score)
-
-        np.multiply(l_open, go_minus_ge, out=pen, casting="unsafe")
-        pen += ge
-        left_score = sc["l"][:wd]
-        np.subtract(left_in, pen, out=left_score)
-        np.maximum(left_score, zero, out=left_score)
-
-        maxv = sc["mx"][:wd]
-        np.maximum(d1, up_score, out=maxv)
-        np.maximum(maxv, left_score, out=maxv)
-
-        # cells past either string's real length must be zeroed; skip the
-        # two batch-wide mask passes when the whole window is interior to
-        # every pair (true for most diagonals under the tight ladder)
-        if not (i_hi < min_n and j_hi < min_w):
-            iv = iv_all[i_lo : i_hi + 1]
-            valid = sc["v2"][:wd]
-            np.less(iv[:, None], nlens_row, out=valid)
-            valid &= (d - iv)[:, None] < wlens_row
-            maxv *= valid
-
-        diag_taken = np.equal(maxv, d1, out=sc["dt"][:wd])
-        u_new = np.not_equal(maxv, up_score, out=sc["un"][:wd])
-        u_new |= diag_taken
-        l_new = np.not_equal(maxv, left_score, out=sc["ln"][:wd])
-        l_new |= diag_taken
-
-        # rotate: the d-2 H buffer is recycled for the current diagonal;
-        # clear whatever it held outside the new window
-        h_cur = h_prev2
-        lo_s, hi_s = i_lo + 1, i_hi + 2
-        plo, phi = win_prev2
-        if plo < lo_s:
-            h_cur[plo : min(lo_s, phi)] = 0
-        if phi > hi_s:
-            h_cur[max(hi_s, plo) : phi] = 0
-        h_cur[lo_s:hi_s] = maxv
-
-        # masks: only diag d-1 is ever read, so overwrite in place (reads
-        # above are already materialized), resetting stale cells to True
-        mplo, mphi = win_prev
-        if mplo < lo_s:
-            u_prev[mplo : min(lo_s, mphi)] = True
-            l_prev[mplo : min(lo_s, mphi)] = True
-        if mphi > hi_s:
-            u_prev[max(hi_s, mplo) : mphi] = True
-            l_prev[max(hi_s, mplo) : mphi] = True
-        u_prev[lo_s:hi_s] = u_new
-        l_prev[lo_s:hi_s] = l_new
-
-        np.maximum(best, maxv.max(axis=0), out=best)
-
-        h_prev2 = h_prev
-        h_prev = h_cur
-        win_prev2 = win_prev
-        win_prev = (lo_s, hi_s)
-
-    return best.astype(np.int64)
+    """Banded scores for long-document pairs, O(len * band): the verify
+    stage's view of :func:`sw_batch` with ``band_radius`` and no typos.
+    ``a`` plays the needle, ``b`` the haystack. The exact-match bonus is
+    NOT included (callers detect exactness by hash equality first).
+    ``assume_folded`` is not read: sw_batch finds folded input itself."""
+    scores, _, exact = sw_batch(a_texts, b_texts, scoring, compute_typos=False,
+                                band_radius=band_radius)
+    return scores - exact * scoring.exact_match_bonus
 
 
 def greedy_batch(
@@ -567,7 +381,6 @@ def greedy_batch(
     order = np.argsort([len(t) for t in texts], kind="stable")
     start = 0
     while start < bsz:
-        w0 = max(len(texts[order[start]]), 1)
         stop = start + 1
         while stop < bsz:
             w = max(len(texts[order[stop]]), 1)
@@ -659,7 +472,7 @@ def self_scores_batch(texts: list[bytes], scoring: Scoring = DEFAULT_SCORING) ->
 
 
 def normalized_similarity(
-    scores: np.ndarray, self_a: np.ndarray, self_b: np.ndarray, exact_bonus_included: bool = False
+    scores: np.ndarray, self_a: np.ndarray, self_b: np.ndarray
 ) -> np.ndarray:
     """Map raw pair scores into [0, 1]: 2*score / (self(a) + self(b)).
 

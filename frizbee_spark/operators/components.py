@@ -119,7 +119,6 @@ def _driver_components(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    use_local_checkpoint: bool = True,
     reliable_checkpoint: bool = False,
     driver_max_edges: int = 5_000_000,
 ) -> DataFrame:
@@ -157,12 +156,10 @@ def connected_components(
     def _truncate(df: DataFrame) -> DataFrame:
         if reliable_checkpoint:
             return df.checkpoint(eager=False)
-        if use_local_checkpoint:
-            # lazy: materialized by the next checksum collect — no extra
-            # action per round; rounds before the last materialized one
-            # are dropped, the result's own is released by its owner
-            return tracked_local_checkpoint(df, chain)
-        return df
+        # lazy: materialized by the next checksum collect — no extra
+        # action per round; rounds before the last materialized one are
+        # dropped, the result's own is released by its owner
+        return tracked_local_checkpoint(df, chain)
 
     canon = _canon(edges)
     if driver_max_edges:

@@ -114,7 +114,6 @@ class DedupConfig:
                                  # are ~0, so fp buckets stay tight
     span_min_len: int = 2000     # only docs this long enter the span pass
     span_min_shared: int = 2     # shared fingerprints to call a span pair
-    max_pairs_per_bucket: int = 100_000  # hard cap per (bucket, salt) group
 
 
 DEFAULT_DEDUP = DedupConfig()
@@ -852,7 +851,6 @@ def simhash_pairs(signatures: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP) -> Da
 def winnow_span_pairs(
     docs: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP,
     id_col: str = "doc_id", text_col: str = "norm_text",
-    confirm: bool = True,
     keep_witness: bool = False,
 ) -> DataFrame:
     """Long-exact-span candidate pairs via winnowing fingerprints.
@@ -863,7 +861,7 @@ def winnow_span_pairs(
     suppresses chance collisions. Only docs >= span_min_len enter (the
     cost-based routing precedent of one_shot/mod.rs:20-25).
 
-    With ``confirm`` (default), each candidate pair is byte-verified: one
+    Each candidate pair is byte-verified: one
     shared fingerprint's ``span_shingle_k``-gram is compared
     byte-for-byte, closing the fingerprint-collision loophole — output
     gains a ``span_confirmed`` column. The winnow kernel emits each
@@ -882,7 +880,7 @@ def winnow_span_pairs(
     near-duplicates (verify_pairs would correctly score them below the
     similarity threshold anyway).
 
-    With ``keep_witness`` (requires ``confirm``) the output additionally
+    With ``keep_witness`` the output additionally
     carries the witness gram's 0-based byte offsets ``a_off``/``b_off``
     — the anchor :func:`span_extents` extends into the full shared-block
     report.
@@ -924,9 +922,6 @@ def winnow_span_pairs(
         )
         .filter(F.col("shared_fps") >= cfg.span_min_shared)
     )
-    if not confirm:
-        return pairs.select("a", "b", "shared_fps")
-
     # byte-verify the witness gram JVM-side: substring on the utf-8 BYTES
     # (offsets are byte offsets), pair table broadcast against the corpus
     d = docs.select(F.col(id_col).alias("doc_id"),
@@ -1129,7 +1124,7 @@ def verify_pairs(
                 sel = order[start:stop]
                 a_b = [ta[i] for i in sel]
                 b_b = [tb[i] for i in sel]
-                s = sw_score_banded(a_b, b_b, band_radius=radius, assume_folded=True)
+                s = sw_score_banded(a_b, b_b, band_radius=radius)
                 self_a = self_scores_batch(a_b)
                 self_b = self_scores_batch(b_b)
                 sims[sel] = normalized_similarity(s, self_a, self_b)

@@ -193,10 +193,6 @@ class PipelineConfig:
     # resume loudly instead of silently mixing extraction semantics.
     check_extraction: bool = True   # assert extracted_text == text per url
     check_id_collisions: bool = True
-    doc_partitions: int | None = None   # force a doc_id hash layout on the
-                                        # documents checkpoint; default is
-                                        # no shuffle (scan-split order) —
-                                        # see the comment in s_documents
     checkpoint_stages: tuple = DEFAULT_CHECKPOINTS
 
 
@@ -839,7 +835,7 @@ class NearDupPipeline:
             keep = [c for c in ("url", "warc_ts", "text", "norm_text", "lang",
                                 "_extract_ok") if c in work.columns]
             out_df = work.select("doc_id", *keep)
-            # NO stage-boundary repartition by default: extract/normalize
+            # NO stage-boundary repartition: extract/normalize
             # is map-only, so writing in scan-split order avoids shuffling
             # the full corpus text (the single largest byte stream in the
             # pipeline — removing it cut ~0.5 GB of shuffle at 400k docs).
@@ -848,11 +844,7 @@ class NearDupPipeline:
             # B5 per-thread volume heuristic, parallel/mod.rs:131-143,
             # expressed as split bytes); nothing downstream needs doc_id
             # hash distribution (candidates re-shuffle on bucket keys,
-            # verify re-shuffles on pair keys). An explicit
-            # cfg.doc_partitions still forces a layout when a deployment
-            # wants checkpoint files bucketed by doc_id.
-            if self.cfg.doc_partitions:
-                out_df = out_df.repartition(self.cfg.doc_partitions, "doc_id")
+            # verify re-shuffles on pair keys).
             return out_df
 
         # the documents stamp always carries the extractor identity, so

@@ -6,6 +6,8 @@ golden cases plus seeded random batches hitting the length-bucket ladder
 boundaries (src/one_shot/matcher.rs:115-132) +/- 1.
 """
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -64,20 +66,29 @@ def random_strings(rng, count, lengths, alphabet):
     return out
 
 
+# letters of both cases, delimiters, digits; the lowercase-only alphabet
+# takes sw_batch's folded path (no per-cell case compare)
+MIXED_CASE = b"abcdefghABCDEF-_ ./,:0123456789"
+LOWER_CASE = b"abcdefgh-_ ./,:0123456789"
+
+
 class TestRandomDifferential:
-    @pytest.mark.parametrize("seed", [1, 2, 3])
-    def test_random_batches(self, seed):
+    @pytest.mark.parametrize("seed, alphabet", [
+        *(pytest.param(s, MIXED_CASE, id=str(s)) for s in (1, 2, 3)),
+        *(pytest.param(s, LOWER_CASE, id=f"lower-{s}") for s in (4, 5)),
+    ])
+    def test_random_batches(self, seed, alphabet):
         rng = np.random.default_rng(seed)
-        # alphabet with letters (both cases), delimiters, digits
-        alphabet = np.frombuffer(
-            b"abcdefghABCDEF-_ ./,:0123456789", dtype=np.uint8
-        )
+        alphabet = np.frombuffer(alphabet, dtype=np.uint8)
         # ladder boundary lengths +/- 1 (FIXTURES.md section 4)
         lengths = sorted({v + d for v in LENGTH_BUCKETS[:9] for d in (-1, 0, 1)})
         needles = random_strings(rng, 200, [1, 2, 3, 4, 6, 8, 12], alphabet)
         haystacks = random_strings(rng, 200, lengths, alphabet)
 
         scores, typos, exact = sw_batch(needles, haystacks)
+        plain, no_typos, _ = sw_batch(needles, haystacks, compute_typos=False)
+        np.testing.assert_array_equal(plain, scores)
+        assert (no_typos == -1).all()
         for k in range(len(needles)):
             es, mat, ee = smith_waterman(needles[k], haystacks[k])
             et = typos_from_score_matrix(mat)
@@ -145,6 +156,69 @@ class TestBanded:
             scores_wide, self_scores_batch([base]), self_scores_batch([shifted])
         )
         assert sims[0] > 0.8
+
+    def test_band_at_max_length_equals_unbanded(self):
+        # a band as wide as the longest string clips nothing: scores,
+        # typos and exact flags equal the unbanded matrices
+        rng = np.random.default_rng(13)
+        for alphabet in (b"abcdEFGH -_.:01", b"abcdefgh -_.:01"):
+            alpha = np.frombuffer(alphabet, dtype=np.uint8)
+            needles = random_strings(rng, 60, [1, 3, 7, 12, 20], alpha)
+            haystacks = random_strings(rng, 60, [1, 5, 16, 31, 64], alpha)
+            full = sw_batch(needles, haystacks)
+            longest = max(len(s) for s in needles + haystacks)
+            for r in (longest, longest + 5):
+                banded = sw_batch(needles, haystacks, band_radius=r)
+                for got, want in zip(banded, full):
+                    np.testing.assert_array_equal(got, want)
+
+    def test_banded_scores_pinned(self):
+        # digest of sw_score_banded over mixed-case and lowercase batches
+        # of edited, unrelated and identical pairs, recorded from the
+        # rolling-buffer kernel this band clip replaced
+        h = hashlib.sha256()
+        for a, b in _banded_batches():
+            for r in (1, 2, 3, 8, 48, 200):
+                h.update(sw_score_banded(a, b, band_radius=r).astype("<i8").tobytes())
+        assert h.hexdigest() == BANDED_DIGEST
+
+
+BANDED_DIGEST = "8ba904714cefb372d5fdf9065d6ea924bd9a6f9c297b09073c538dd907ecfff6"
+
+
+def _banded_batches():
+    """Seeded (a, b) batches of edited, unrelated and identical pairs:
+    two mixed-case, two lowercase-only (the folded path)."""
+    batches = []
+    for seed, alphabet in ((31, b"abcdefABCDEF -_.,:0123"), (32, b"xyzXYZ abc.-"),
+                           (33, b"abcdefgh -_.,:0123"), (34, b"xyz abc.-")):
+        rng = np.random.default_rng(seed)
+        alpha = np.frombuffer(alphabet, dtype=np.uint8)
+        a, b = [], []
+        for k in range(30):
+            base = bytes(rng.choice(alpha, size=int(rng.integers(0, 260))))
+            if k % 3 == 0:
+                e = bytearray(base)
+                for _ in range(int(rng.integers(1, 8))):
+                    pos = int(rng.integers(0, len(e) + 1))
+                    op = int(rng.integers(0, 4))
+                    if op == 0 and pos < len(e):
+                        e[pos] = int(rng.choice(alpha))
+                    elif op == 1:
+                        e[pos:pos] = bytes(rng.choice(alpha, size=int(rng.integers(1, 30))))
+                    elif op == 2:
+                        del e[pos:pos + int(rng.integers(1, 30))]
+                    else:
+                        e[pos:pos] = bytes([int(rng.choice(alpha))])
+                other = bytes(e)
+            elif k % 3 == 1:
+                other = bytes(rng.choice(alpha, size=int(rng.integers(1, 260))))
+            else:
+                other = base
+            a.append(base)
+            b.append(other)
+        batches.append((a, b))
+    return batches
 
 
 class TestSelfScores:
