@@ -11,7 +11,7 @@ rows of the batch are lanes, NumPy is the SIMD.
 There is one DP kernel, :func:`sw_batch`. Operands are POSITION-MAJOR,
 ``(position, lane)`` arrays with the haystack side reversed, so every
 diagonal's operands are contiguous row slices and each ufunc runs over
-the whole batch at once. It serves both workloads:
+the whole batch at once. It serves all three callers:
 
 - the fuzzy matcher: full matrices on short strings (<= 512 bytes, the
   reference's routing cap, src/one_shot/mod.rs:20-25) plus a vectorized
@@ -24,6 +24,10 @@ the whole batch at once. It serves both workloads:
   document length. :func:`sw_score_banded` is that call without the
   exact-match bonus; similarity normalization lives in
   :func:`normalized_similarity`.
+- the incremental matcher: every keystroke resumes the last needle's
+  score matrix (:func:`_sw_skewed` with ``resume``). Rows of the shared
+  needle prefix are kept; the prefix length is a floor on each
+  diagonal's row range, the same kind of clip as the band.
 
 Scores use int16 when no cell can overflow it, else int32, with explicit
 clamping at zero (NumPy wraps; the reference relies on u16 saturating
@@ -31,6 +35,8 @@ arithmetic).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -134,43 +140,99 @@ def sw_batch(
     bonus and the per-cell raw-byte compare is skipped.
     """
     assert len(needles) == len(haystacks)
-    bsz = len(needles)
-    if bsz == 0:
+    if not needles:
         z = np.zeros(0, dtype=np.int64)
         return z, z.copy(), np.zeros(0, dtype=bool)
+    hay = _prepare_haystacks(haystacks, scoring)
+    return _sw_skewed(needles, hay, scoring, compute_typos, band_radius)[:3]
 
-    ns, nlens = _pad_bytes(needles)
+
+class _Haystacks(NamedTuple):
+    """The needle-independent operands of :func:`_sw_skewed`: position-major
+    ``(position, lane)`` and reversed, ``rev[t] == orig[w_max - 1 - t]``,
+    so a diagonal's haystack positions are a plain row range."""
+
+    texts: list[bytes]
+    lens: np.ndarray
+    low: np.ndarray          # case-folded bytes
+    raw: np.ndarray          # raw bytes, for the matching-case compare
+    valid: np.ndarray        # position < length
+    static: np.ndarray       # match score + delimiter + capitalization bonus
+    h0_nonalpha: np.ndarray  # first byte not a letter (offset-prefix bonus)
+    has_upper: bool
+
+
+def _prepare_haystacks(haystacks: list[bytes], scoring: Scoring) -> _Haystacks:
+    """Build the haystack side once; a caller that scores many needles
+    against the same haystacks (the incremental matcher) keeps it."""
     hs, wlens = _pad_bytes(haystacks)
-    n_max, w_max = ns.shape[1], hs.shape[1]
+    h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
+    delim_bonus, cap_bonus = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
+    h0_nonalpha = ~((hs[:, 0] >= 65) & (hs[:, 0] <= 90)) & ~((hs[:, 0] >= 97) & (hs[:, 0] <= 122))
+    return _Haystacks(
+        texts=haystacks,
+        lens=wlens,
+        low=np.ascontiguousarray(h_low.T[::-1]),
+        raw=np.ascontiguousarray(hs.T[::-1]),
+        valid=np.arange(hs.shape[1] - 1, -1, -1)[:, None] < wlens[None, :],
+        static=np.ascontiguousarray((delim_bonus + cap_bonus + scoring.match_score).T[::-1]),
+        h0_nonalpha=h0_nonalpha & (wlens > 0),
+        has_upper=bool(h_upper.any()),
+    )
+
+
+def _sw_skewed(
+    needles: list[bytes],
+    hay: _Haystacks,
+    scoring: Scoring,
+    compute_typos: bool,
+    band_radius: int | None = None,
+    resume: tuple[np.ndarray | None, int] | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`sw_batch`, also returning the skewed score matrix ``S``.
+
+    ``hay`` is :func:`_prepare_haystacks` of the haystacks under the same
+    ``scoring``. ``resume=(prev, cp)`` resumes ``prev``, the ``S`` of an
+    earlier call on the same ``hay`` whose needles share their first
+    ``cp`` bytes with these (``prev`` may be None when ``cp`` is 0).
+    ``S`` is indexed by needle row, so rows below ``cp`` are copied, not
+    recomputed: the row floor ``cp`` is one more clip of each diagonal's
+    row range, and the loop starts at diagonal ``cp``. Gap flags of the
+    rows from ``cp`` on start fresh, as at any row's first cell. A
+    resumed ``S`` is full height even without typos, so the next call
+    can resume it too.
+    """
+    bsz = len(needles)
+    ns, nlens = _pad_bytes(needles)
+    wlens, h0_nonalpha = hay.lens, hay.h0_nonalpha
+    n_max, w_max = ns.shape[1], hay.low.shape[0]
     R = n_max + w_max if band_radius is None else int(band_radius)
     dtype = _score_dtype(min(n_max, w_max), scoring)
 
     n_low, n_upper = _char_classes(ns, scoring.delimiters)[:2]
-    h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
-    delim_bonus, cap_bonus = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
-    h0_nonalpha = ~((hs[:, 0] >= 65) & (hs[:, 0] <= 90)) & ~((hs[:, 0] >= 97) & (hs[:, 0] <= 122))
-    h0_nonalpha &= wlens > 0
-    folded = not (n_upper.any() or h_upper.any())
+    folded = not (n_upper.any() or hay.has_upper)
 
-    # position-major operands; haystack rows reversed so a diagonal's
-    # haystack positions are a plain row range: rev[t] == orig[w_max-1-t].
-    # On a case-folded match the matching-case bonus fires exactly when
-    # the raw bytes are equal, so it needs one compare of the raw bytes.
+    # position-major needle operands. On a case-folded match the
+    # matching-case bonus fires exactly when the raw bytes are equal, so
+    # it needs one compare of the raw bytes.
     n_low_T = np.ascontiguousarray(n_low.T)
     n_valid_T = np.arange(n_max)[:, None] < nlens[None, :]
-    h_low_rev_T = np.ascontiguousarray(h_low.T[::-1])
-    h_valid_rev_T = np.arange(w_max - 1, -1, -1)[:, None] < wlens[None, :]
-    static = delim_bonus + cap_bonus + scoring.match_score
+    h_low_rev_T, h_valid_rev_T = hay.low, hay.valid
     if folded:
-        static += scoring.matching_case_bonus
+        static_rev_T = (hay.static + scoring.matching_case_bonus).astype(dtype)
     else:
+        static_rev_T = hay.static.astype(dtype)
         n_raw_T = np.ascontiguousarray(ns.T)
-        h_raw_rev_T = np.ascontiguousarray(hs.T[::-1])
-    static_rev_T = np.ascontiguousarray(static.T[::-1]).astype(dtype)
+        h_raw_rev_T = hay.raw
 
-    rows = n_max + w_max + 1 if compute_typos else 3
+    ring = not compute_typos and resume is None  # keep only three diagonals
+    rows = 3 if ring else n_max + w_max + 1
     slots = n_max + 1
     S = np.zeros((rows, slots, bsz), dtype=dtype)
+    prev, cp = resume if resume is not None else (None, 0)
+    if cp:
+        # the cached rows i < cp: slots 1..cp, diagonals up to cp + w_max - 2
+        S[:cp + w_max + 1, :cp + 1] = prev[:cp + w_max + 1, :cp + 1]
     # gap-open flags of the previous diagonal, by slot. Both are read from
     # the up neighbour (i, j-1), i.e. the same slot the cell writes, so
     # they are updated in place; slots above the written window are
@@ -181,16 +243,17 @@ def sw_batch(
     bw = min(n_max, w_max, R + 1)
     sc = {k: np.empty((bw, bsz), dtype=dtype) for k in ("d1", "d2", "pen", "u", "l")}
     sc.update({k: np.empty((bw, bsz), dtype=bool) for k in ("m", "dt", "v")})
-    best = np.zeros(bsz, dtype=dtype)
+    best = S[:cp + w_max + 1, 1:cp + 1].max(axis=(0, 1)) if cp else np.zeros(bsz, dtype=dtype)
     go_minus_ge = dtype(scoring.gap_open_penalty - scoring.gap_extend_penalty)
     ge, mismatch, zero = (dtype(scoring.gap_extend_penalty),
                           dtype(scoring.mismatch_penalty), dtype(0))
     mcb = dtype(scoring.matching_case_bonus)
     min_n, min_w = int(nlens.min()), int(wlens.min())
 
-    for d in range(n_max + w_max - 1):
-        # band |j - i| <= R with j = d - i  =>  (d - R) / 2 <= i <= (d + R) / 2
-        i_lo = max(0, d - w_max + 1, (d - R + 1) // 2)
+    for d in range(cp, n_max + w_max - 1):
+        # band |j - i| <= R with j = d - i  =>  (d - R) / 2 <= i <= (d + R) / 2;
+        # rows below the floor cp are resumed, not computed
+        i_lo = max(cp, d - w_max + 1, (d - R + 1) // 2)
         i_hi = min(n_max - 1, d, (d + R) // 2)
         if i_lo > i_hi:
             break  # the band has left the matrix; later diagonals are empty
@@ -236,11 +299,13 @@ def sw_batch(
         np.maximum(left, zero, out=left)
 
         # with the three-row ring, the two slots just outside this window
-        # may hold an older diagonal; later diagonals read them as zeros
+        # may hold an older diagonal; later diagonals read them as zeros.
+        # A full S never writes them, and slot cp holds a resumed row
         row = S[(d + 2) % rows]
-        row[lo - 1] = 0
-        if hi < slots:
-            row[hi] = 0
+        if ring:
+            row[lo - 1] = 0
+            if hi < slots:
+                row[hi] = 0
         maxv = row[lo:hi]
         np.maximum(d1, up, out=maxv)
         np.maximum(maxv, left, out=maxv)
@@ -258,7 +323,7 @@ def sw_batch(
         np.maximum(best, maxv.max(axis=0), out=best)
 
     exact = (nlens == wlens) & np.array(
-        [needles[k] == haystacks[k] for k in range(bsz)], dtype=bool
+        [needles[k] == hay.texts[k] for k in range(bsz)], dtype=bool
     )
     scores = best.astype(np.int64)
     scores[exact] += scoring.exact_match_bonus
@@ -267,7 +332,7 @@ def sw_batch(
         typos = _typos_skewed(S, nlens, wlens)
     else:
         typos = np.full(bsz, -1, dtype=np.int64)
-    return scores, typos, exact
+    return scores, typos, exact, S
 
 
 def _typos_skewed(S: np.ndarray, nlens: np.ndarray, wlens: np.ndarray) -> np.ndarray:

@@ -389,12 +389,12 @@ def _bucket_pairs_kernel(
 
 def pairs_from_buckets(
     bucketed: DataFrame,
-    key_cols: list[str],
+    key_col: str,
     cfg: DedupConfig = DEFAULT_DEDUP,
-    keep_multiplicity: bool = False,
     payload: str | None = None,
 ) -> DataFrame:
-    """(key_cols..., doc_id) -> canonical candidate pairs (a < b).
+    """(key_col, doc_id) -> canonical candidate pairs (a < b), one row per
+    (bucket, pair): callers count a pair's co-occurrences by grouping.
 
     ONE shuffle: hash-repartition on the bucket key, sort within
     partitions by (key, doc_id), then a vectorized Arrow kernel streams
@@ -414,10 +414,7 @@ def pairs_from_buckets(
     that shuffled the (huge) exploded bucket table 3-4 times; the pair
     semantics are identical (differentially tested). Buckets straddling
     Arrow batches are carried between batches inside the kernel; a hot
-    bucket lands on one task but costs only a linear scan there. With
-    multiple key columns the bucket identity is their xxhash64 (a 64-bit
-    collision merges two buckets into one candidate pool — harmless:
-    verification rejects the cross pairs).
+    bucket lands on one task but costs only a linear scan there.
 
     With ``payload`` (a long column of ``bucketed``), each emitted pair
     also carries that column's values for both members as
@@ -426,9 +423,7 @@ def pairs_from_buckets(
     rides the one pairing shuffle and is gathered by the same indices as
     the ids.
     """
-    cols = [F.col(key_cols[0]).cast("long").alias("_bk")] if len(key_cols) == 1 \
-        else [F.xxhash64(*[F.col(c) for c in key_cols]).alias("_bk")]
-    cols.append(F.col("doc_id"))
+    cols = [F.col(key_col).cast("long").alias("_bk"), F.col("doc_id")]
     if payload:
         cols.append(F.col(payload).cast("long").alias("_pl"))
     keyed = bucketed.select(*cols)
@@ -482,8 +477,7 @@ def pairs_from_buckets(
                 # most cap/batch times. Pair multiplicity for such giant
                 # buckets differs slightly from the single-segment
                 # formulation (extra link edges); connectivity — the
-                # property clustering needs — is preserved, and
-                # dropDuplicates removes repeated link pairs.
+                # property clustering needs — is preserved.
                 yield emit(carry_ids, carry_pl if payload else None,
                            np.array([carry_ids.size], dtype=np.int64))
                 carry_ids = carry_ids[:1].copy()
@@ -500,11 +494,7 @@ def pairs_from_buckets(
     schema = "a long, b long"
     if payload:
         schema += ", payload_a long, payload_b long"
-    pairs = w.mapInPandas(gen, schema=schema)
-    if keep_multiplicity:
-        # one row per (bucket, pair) — callers count co-occurrences
-        return pairs
-    return pairs.dropDuplicates(["a", "b"])
+    return w.mapInPandas(gen, schema=schema)
 
 
 #: priority-ordered tier codes of the candidate bucket table — lower
@@ -581,9 +571,7 @@ def _tier_pairs(rows: DataFrame, cfg: DedupConfig = DEFAULT_DEDUP) -> DataFrame:
     if incremental:
         payload = payload + F.when(F.col("new"), 4).otherwise(0)
     raw = pairs_from_buckets(
-        rows.withColumn("_payload", payload), ["bkey"], cfg,
-        keep_multiplicity=True, payload="_payload",
-    )
+        rows.withColumn("_payload", payload), "bkey", cfg, payload="_payload")
     t = F.col("payload_a").bitwiseAND(3)
     aggs = [
         F.min(t).alias("_best"),
@@ -913,8 +901,8 @@ def winnow_span_pairs(
     # fingerprints; min(struct) keeps ONE coherent witness offset pair
     # (both offsets from the same fingerprint row) for the byte check
     pairs = (
-        pairs_from_buckets(fps.select("fp", "doc_id", "pos"), ["fp"], cfg,
-                           keep_multiplicity=True, payload="pos")
+        pairs_from_buckets(fps.select("fp", "doc_id", "pos"), "fp", cfg,
+                           payload="pos")
         .groupBy("a", "b")
         .agg(
             F.count("*").alias("shared_fps"),

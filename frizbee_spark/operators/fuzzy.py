@@ -18,6 +18,9 @@ Pipeline stages inside a batch (mirrors matcher.rs:91-144): min-length
 filter -> char-count prefilter over a per-batch byte histogram -> greedy
 routing for oversized strings -> length-bucket ladder -> batched
 wavefront DP, one call per bucket across all needles -> typo filter.
+IncrementalMatcher runs the same wavefront, resumed from the shared
+needle prefix; the scoring recurrence lives only in
+``functions/wavefront.py``.
 The char-count prefilter is *tighter* than the reference's unordered SIMD
 prefilter (no false negatives w.r.t. the typo budget: an absent needle
 char always costs at least one typo), so post-DP results are identical.
@@ -37,7 +40,13 @@ from ..functions.oracle import (
     smith_waterman,
     typos_from_score_matrix,
 )
-from ..functions.wavefront import greedy_batch, sw_batch
+from ..functions.wavefront import (
+    _Haystacks,
+    _prepare_haystacks,
+    _sw_skewed,
+    greedy_batch,
+    sw_batch,
+)
 
 
 @dataclass(frozen=True)
@@ -242,127 +251,21 @@ def match_indices(
     return MatchIndices(score, indices_from_score_matrix(matrix), exact)
 
 
-class _IncrementalBucket:
-    """Pre-interleaved haystack bucket with cached DP columns
-    (reference: src/incremental/bucket.rs:49-122).
-
-    Haystacks are padded to the bucket width and stored POSITION-MAJOR
-    (``(W, B)`` — the interleave of interleave/mod.rs:10-34), with the
-    static per-position bonus columns precomputed once. Each needle char
-    appends one H column computed with the scalar recurrence vectorized
-    across the B lanes; on a new needle only the columns after the shared
-    prefix are recomputed (``extend_to`` truncates + extends).
-    """
-
-    def __init__(self, positions: np.ndarray, texts: list[bytes], width: int,
-                 scoring):
-        from ..functions.wavefront import _char_classes, _haystack_bonus_cols, _pad_bytes
-
-        self.positions = positions          # global indices of these rows
-        self.texts = texts
-        self.scoring = scoring
-        hs, self.lens = _pad_bytes(texts, width=max(width, 1))
-        h_low, h_upper, h_lower, h_delim = _char_classes(hs, scoring.delimiters)
-        delim_b, cap_b = _haystack_bonus_cols(h_upper, h_lower, h_delim, scoring)
-        # position-major statics: row j = haystack position j, lanes contiguous
-        self.h_low_T = np.ascontiguousarray(h_low.T)
-        self.h_upper_T = np.ascontiguousarray(h_upper.T)
-        self.static_bonus_T = np.ascontiguousarray((delim_b + cap_b).T).astype(np.int32)
-        self.h0_nonalpha = ~(
-            ((hs[:, 0] >= 65) & (hs[:, 0] <= 90))
-            | ((hs[:, 0] >= 97) & (hs[:, 0] <= 122))
-        ) & (self.lens > 0)
-        self.valid_T = np.ascontiguousarray(
-            (np.arange(hs.shape[1])[None, :] < self.lens[:, None]).T
-        )
-        self.columns: list[np.ndarray] = []   # H column per needle char, (W, B)
-        self.col_best: list[np.ndarray] = []  # running cell max per lane
-        self.needle: bytes = b""
-
-    def extend_to(self, nb: bytes) -> int:
-        """Reuse shared-prefix columns; compute only the new ones.
-        Returns the number of columns computed (the reuse metric)."""
-        cp = 0
-        limit = min(len(nb), len(self.needle), len(self.columns))
-        while cp < limit and nb[cp] == self.needle[cp]:
-            cp += 1
-        del self.columns[cp:]
-        del self.col_best[cp:]
-        computed = 0
-        for i in range(cp, len(nb)):
-            self._append_column(nb[i])
-            computed += 1
-        self.needle = nb
-        return computed
-
-    def _append_column(self, nc: int) -> None:
-        sc = self.scoring
-        W, B = self.h_low_T.shape
-        i = len(self.columns)
-        prev_col = self.columns[-1] if i else np.zeros((W, B), dtype=np.int32)
-        cur = np.empty((W, B), dtype=np.int32)
-
-        n_upper = 65 <= nc <= 90
-        nc_low = nc + 32 if n_upper else nc
-        go, ge = sc.gap_open_penalty, sc.gap_extend_penalty
-
-        up_prev = np.zeros(B, dtype=np.int32)
-        up_open = np.ones(B, dtype=bool)
-        left_open = np.ones(B, dtype=bool)
-        zero = np.int32(0)
-
-        for j in range(W):
-            is_match = self.h_low_T[j] == nc_low
-            msco = sc.match_score
-            if j == 0:
-                diag = zero
-                msco_row = msco + sc.prefix_bonus
-                bonus = msco_row + np.where(
-                    self.h_upper_T[j] == n_upper, sc.matching_case_bonus, 0
-                )
-            else:
-                diag = prev_col[j - 1]
-                bonus = msco + self.static_bonus_T[j] + np.where(
-                    self.h_upper_T[j] == n_upper, sc.matching_case_bonus, 0
-                )
-                if j == 1:
-                    bonus = bonus + np.where(
-                        (prev_col[0] == 0) & self.h0_nonalpha,
-                        sc.offset_prefix_bonus, 0,
-                    )
-            diag_score = np.where(
-                is_match, diag + bonus,
-                np.maximum(diag - sc.mismatch_penalty, zero),
-            )
-            up_score = np.maximum(up_prev - np.where(up_open, go, ge), zero)
-            left = prev_col[j]
-            left_score = np.maximum(left - np.where(left_open, go, ge), zero)
-            mx = np.maximum(diag_score, np.maximum(up_score, left_score))
-            diag_taken = mx == diag_score
-            up_open = (mx != up_score) | diag_taken
-            left_open = (mx != left_score) | diag_taken
-            up_prev = mx
-            cur[j] = mx
-
-        cur *= self.valid_T  # zero cells past each lane's real length
-        self.columns.append(cur)
-        prev_best = self.col_best[-1] if self.col_best else np.zeros(B, dtype=np.int32)
-        self.col_best.append(np.maximum(prev_best, cur.max(axis=0)))
-
-
 class IncrementalMatcher:
     """Keystroke-to-keystroke matcher over a fixed haystack list
     (reference: src/incremental/matcher.rs:6-118).
 
-    Haystacks are pre-interleaved into length buckets once at
-    construction; every keystroke reuses the cached DP columns of the
-    shared needle prefix and computes only the new columns
-    (reference: src/incremental/matcher.rs:89-118, bucket.rs:49-122) —
-    "ab" -> "abc" computes exactly one column per bucket
-    (``stats["columns_computed"]`` instruments this). Results are
-    identical to :func:`match_list` with sorting enabled; oversized
-    haystacks route through the (stateless, batched) greedy matcher per
-    keystroke, as in the reference.
+    Haystacks are split into length buckets once at construction. Each
+    bucket keeps the skewed score matrix ``S`` of the last needle, and a
+    keystroke resumes ``wavefront.sw_batch``'s loop from it: the needle
+    rows of the shared prefix are kept and only the rows after it
+    are computed, the row floor of the one wavefront (reference:
+    src/incremental/matcher.rs:89-118, bucket.rs:49-122). "ab" -> "abc"
+    computes exactly one needle row per bucket
+    (``stats["columns_computed"]`` counts needle rows, the reference's
+    columns). Results are identical to :func:`match_list` with sorting
+    enabled; oversized haystacks route through the (stateless, batched)
+    greedy matcher per keystroke, as in the reference.
     """
 
     def __init__(self, haystacks: list[str], config: MatchConfig = DEFAULT_CONFIG):
@@ -374,22 +277,21 @@ class IncrementalMatcher:
         self.stats = {"columns_computed": 0, "needles": 0}
         self._hist = byte_histograms(self._texts) if self._texts else None
 
-        ladder = np.array(LENGTH_BUCKETS)
-        self._buckets: list[_IncrementalBucket] = []
+        # length buckets as (global rows, their prepared haystacks); _S
+        # holds each bucket's skewed score matrix of _needle, the last
+        # non-empty needle
+        self._buckets: list[tuple[np.ndarray, _Haystacks]] = []
         dp_rows = np.flatnonzero(self._lens <= LENGTH_BUCKETS[-1])
         if dp_rows.size:
-            which = np.searchsorted(ladder, self._lens[dp_rows])
+            which = np.searchsorted(np.array(LENGTH_BUCKETS), self._lens[dp_rows])
             for b in np.unique(which):
                 rows = dp_rows[which == b]
-                self._buckets.append(_IncrementalBucket(
-                    rows, [self._texts[r] for r in rows], int(ladder[b]),
-                    config.scoring,
-                ))
-        self._greedy_rows = np.flatnonzero(self._lens > LENGTH_BUCKETS[-1])
+                self._buckets.append((rows, _prepare_haystacks(
+                    [self._texts[r] for r in rows], config.scoring)))
+        self._S: list[np.ndarray | None] = [None] * len(self._buckets)
+        self._needle = b""
 
     def match_needle(self, needle: str | bytes) -> list[Match]:
-        from ..functions.wavefront import _typos_skewed
-
         nb = needle.encode() if isinstance(needle, str) else bytes(needle)
         cfg = self.config
         self.stats["needles"] += 1
@@ -403,32 +305,20 @@ class IncrementalMatcher:
         typos = np.zeros(count, dtype=np.int64)
         exact = np.zeros(count, dtype=bool)
         keep = np.ones(count, dtype=bool)
-        is_greedy = np.zeros(count, dtype=bool)
-
         # per-needle routing, as in match_list_arrays: oversized DP
         # matrices go greedy even for bucketed rows
-        route_greedy = (n * self._lens > SW_MAX_CELLS) | (
-            self._lens > LENGTH_BUCKETS[-1]
-        )
-        is_greedy[:] = route_greedy
+        is_greedy = (n * self._lens > SW_MAX_CELLS) | (self._lens > LENGTH_BUCKETS[-1])
 
-        for bkt in self._buckets:
-            self.stats["columns_computed"] += bkt.extend_to(nb)
-            rows = bkt.positions
-            scores[rows] = bkt.col_best[-1]
-            ex = np.array([t == nb for t in bkt.texts], dtype=bool)
-            exact[rows] = ex
-            scores[rows] += np.where(ex, cfg.scoring.exact_match_bonus, 0)
-            if cfg.max_typos is not None:
-                # skew the cached columns into sw_batch's layout:
-                # S[i + j + 2, i + 1] = H(i, j)
-                W, B = bkt.h_low_T.shape
-                S = np.zeros((n + W + 1, n + 1, B), dtype=np.int32)
-                for i, col in enumerate(bkt.columns):
-                    S[i + 2:i + 2 + W, i + 1] = col
-                typos[rows] = _typos_skewed(
-                    S, np.full(B, n, dtype=np.int64), bkt.lens
-                )
+        # rows below the shared prefix are the same for every bucket
+        cp = 0
+        while cp < min(n, len(self._needle)) and nb[cp] == self._needle[cp]:
+            cp += 1
+        self._needle = nb
+        for k, (rows, hay) in enumerate(self._buckets):
+            scores[rows], typos[rows], exact[rows], self._S[k] = _sw_skewed(
+                [nb] * rows.size, hay, cfg.scoring, cfg.max_typos is not None,
+                resume=(self._S[k], cp))
+            self.stats["columns_computed"] += n - cp
 
         g_rows = np.flatnonzero(is_greedy)
         if g_rows.size:

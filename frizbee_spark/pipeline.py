@@ -6,7 +6,9 @@ Stage graph (north-rule requirements in brackets):
     (gates)      opt-in curation gates, one GATES row each
     signatures   MinHash/band/SimHash per doc           [vectorized UDFs]
     candidates   exact ∪ LSH ∪ SimHash pairs            [salted groupBy]
+    tier_report  opt-in: which dedup tier earns a pair  [analysis only]
     span_pairs   winnowing long-exact-span pairs        [substring pass]
+    span_report  maximal shared block per span pair     [analysis only]
     verified     banded SW similarity per pair          [SW verifier]
     edges        verified pairs only
     clusters     large-star/small-star CC               [explicit shuffle]
@@ -750,8 +752,8 @@ class NearDupPipeline:
     ) -> dict[str, DataFrame]:
         """Execute stages up to `until` (inclusive); returns stage tables.
 
-        Caches created by the operators (verify tag table, gated
-        candidates, winnow fingerprints) are released in the ``finally``
+        Caches created by the operators (gated candidates, winnow
+        fingerprints) are released in the ``finally``
         below — after every submission thread is joined — so back-to-back
         runs in one session never accumulate CacheManager blocks
         (round-2 advice). Flow-through stage frames in the returned dict
@@ -765,12 +767,14 @@ class NearDupPipeline:
                 f"run(until={until!r}): unknown stage (expected one of "
                 f"{', '.join(STAGES)})"
             )
-        if until == "tier_report" and not self.cfg.enable_tier_report:
+        switch = {"tier_report": "enable_tier_report", "span_pairs": "enable_span",
+                  "span_report": "enable_span"}.get(until)
+        if switch and not getattr(self.cfg, switch):
             # a stage name implies its stage ran (same contract as an
             # off gate's name, checked in the gate loop)
             raise ValueError(
-                "run(until='tier_report') requires "
-                "cfg.enable_tier_report=True (the attribution pass is opt-in)"
+                f"run(until={until!r}) requires cfg.{switch}=True "
+                f"(the {until} stage is off)"
             )
         try:
             return self._run(docs, input_path, until)

@@ -16,9 +16,8 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     """``persist()`` + register for :func:`release_tracked`.
 
     Operators cache plans consumed by several downstream branches
-    (verify tag table, gated candidates, winnow fingerprints, capped LSH
-    buckets); a bare ``.persist()`` with no owner leaks those blocks into
-    the CacheManager for the life of the session — a long-running stream
+    (gated candidates, winnow fingerprints, capped LSH buckets); a bare
+    ``.persist()`` with no owner leaks those blocks into the CacheManager for the life of the session — a long-running stream
     calling verify per micro-batch accumulates them unboundedly, and with
     ``spark.local.dir`` on /dev/shm the eviction spill competes with the
     heap for host RAM. Every unit-of-work owner (pipeline run, streaming

@@ -162,7 +162,8 @@ class TestPairsFromBuckets:
     def test_dense_bucket_all_pairs(self, spark):
         rows = [(1, i) for i in range(5)]
         df = spark.createDataFrame(rows, "bkt long, doc_id long")
-        got = sorted(map(tuple, pairs_from_buckets(df, ["bkt"]).collect()))
+        pairs = pairs_from_buckets(df, "bkt").dropDuplicates(["a", "b"])
+        got = sorted(map(tuple, pairs.collect()))
         import itertools
 
         want = sorted(itertools.combinations(range(5), 2))
@@ -172,7 +173,7 @@ class TestPairsFromBuckets:
         cfg = DedupConfig(dense_cap=8)
         rows = [(1, i) for i in range(50)]
         df = spark.createDataFrame(rows, "bkt long, doc_id long")
-        got = pairs_from_buckets(df, ["bkt"], cfg).collect()
+        got = pairs_from_buckets(df, "bkt", cfg).dropDuplicates(["a", "b"]).collect()
         assert len(got) <= 2 * 50  # linear, not quadratic
         # connectivity: union-find over emitted edges joins all 50
         parent = list(range(50))
@@ -195,7 +196,7 @@ class TestPairsFromBuckets:
         n = 3000  # > 4 * 100 flush cap, > maxRecordsPerBatch
         rows = [(1, i) for i in range(n)]
         df = spark.createDataFrame(rows, "bkt long, doc_id long")
-        got = pairs_from_buckets(df, ["bkt"], cfg).collect()
+        got = pairs_from_buckets(df, "bkt", cfg).dropDuplicates(["a", "b"]).collect()
         assert len(got) <= 4 * n  # linear-ish, never quadratic
         parent = list(range(n))
 
@@ -213,7 +214,7 @@ class TestPairsFromBuckets:
         cfg = DedupConfig(dense_cap=8, salt_threshold=20, n_salt=4)
         rows = [(1, i) for i in range(200)] + [(2, 1000 + i) for i in range(3)]
         df = spark.createDataFrame(rows, "bkt long, doc_id long")
-        got = pairs_from_buckets(df, ["bkt"], cfg).collect()
+        got = pairs_from_buckets(df, "bkt", cfg).dropDuplicates(["a", "b"]).collect()
         parent = {}
 
         def find(x):
@@ -236,7 +237,7 @@ class TestPairsFromBuckets:
 
     def test_singleton_buckets_emit_nothing(self, spark):
         df = spark.createDataFrame([(i, i) for i in range(10)], "bkt long, doc_id long")
-        assert pairs_from_buckets(df, ["bkt"]).count() == 0
+        assert pairs_from_buckets(df, "bkt").dropDuplicates(["a", "b"]).count() == 0
 
 
 @pytest.mark.spark
@@ -294,6 +295,17 @@ class TestSpanConfirmation:
         sp = out["span_pairs"].toPandas()
         assert "span_confirmed" in sp.columns
         assert sp["span_confirmed"].all()  # winnow candidates are real spans
+
+    @pytest.mark.parametrize("until", ["span_pairs", "span_report"])
+    def test_until_requires_span(self, spark, corpus_dir, tmp_path_factory, until):
+        # a stage name implies its stage ran: with the span pass off, both
+        # span stages raise before any stage runs instead of returning
+        # without the table
+        work = str(tmp_path_factory.mktemp("work_span_off"))
+        pipe = NearDupPipeline(spark, PipelineConfig(workdir=work, enable_span=False))
+        with pytest.raises(ValueError, match="enable_span"):
+            pipe.run(input_path=corpus_dir, until=until)
+        assert not os.listdir(work)
 
 
 class TestBucketPairsKernel:

@@ -170,6 +170,20 @@ class TestIncrementalPrefixReuse:
             want = match_list(needle, hs, cfg)
             assert got == want, f"needle {needle!r} (max_typos={max_typos})"
 
+    @pytest.mark.parametrize("max_typos", [None, 0, 1])
+    def test_capital_after_cached_prefix(self, max_typos):
+        # lowercase haystacks: "abc" takes the folded path, "abcD" resumes
+        # those rows under the case compare in a regrown matrix, "ab"
+        # slices it and "axe" diverges after the first row
+        hs = ["abcd", "abxd", "xabcd", "ab_cd", "zzzz", "abcdabcd", "a.b.c.d",
+              "axe", "maxed"]
+        cfg = MatchConfig(max_typos=max_typos)
+        m = IncrementalMatcher(hs, cfg)
+        assert len(m._buckets) == 2
+        for needle in ["abc", "abcD", "abcDe", "ab", "axe", "aXe", "ax"]:
+            got = m.match_needle(needle)
+            assert got == match_list(needle, hs, cfg), f"needle {needle!r}"
+
 
 class TestFuzzyJoin:
     def test_equals_per_needle_fuzzy_match(self, spark):

@@ -11,13 +11,15 @@ import hashlib
 import numpy as np
 import pytest
 
-from frizbee_spark.constants import LENGTH_BUCKETS
+from frizbee_spark.constants import DEFAULT_SCORING, LENGTH_BUCKETS
 from frizbee_spark.functions.oracle import (
     self_score,
     smith_waterman,
     typos_from_score_matrix,
 )
 from frizbee_spark.functions.wavefront import (
+    _prepare_haystacks,
+    _sw_skewed,
     normalized_similarity,
     self_scores_batch,
     sw_batch,
@@ -219,6 +221,51 @@ def _banded_batches():
             b.append(other)
         batches.append((a, b))
     return batches
+
+
+def _keystrokes(rng, alpha, steps):
+    """Seeded edits of one needle: append, backspace, mid-needle change."""
+    needle = b""
+    for _ in range(steps):
+        op = int(rng.integers(0, 3))
+        if op == 0 or len(needle) < 2:
+            needle += bytes(rng.choice(alpha, size=int(rng.integers(1, 4))))
+        elif op == 1:
+            needle = needle[:-int(rng.integers(1, 3))]
+        else:
+            p = int(rng.integers(0, len(needle)))
+            needle = needle[:p] + bytes(rng.choice(alpha, size=1)) + needle[p + 1:]
+        yield needle
+
+
+class TestResume:
+    """The incremental matcher resumes the wavefront from the shared
+    needle prefix; every step must equal a fresh call, matrix included."""
+
+    @pytest.mark.parametrize("compute_typos", [True, False], ids=["typos", "no-typos"])
+    @pytest.mark.parametrize("seed, alphabet", [
+        pytest.param(21, MIXED_CASE, id="21"),
+        pytest.param(22, LOWER_CASE, id="lower-22"),
+    ])
+    def test_keystrokes_equal_fresh(self, seed, alphabet, compute_typos):
+        rng = np.random.default_rng(seed)
+        alpha = np.frombuffer(alphabet, dtype=np.uint8)
+        haystacks = random_strings(rng, 40, [1, 3, 8, 17, 40], alpha)
+        hay = _prepare_haystacks(haystacks, DEFAULT_SCORING)
+        prev, S = b"", None
+        for needle in _keystrokes(rng, alpha, 60):
+            cp = 0
+            while cp < min(len(needle), len(prev)) and needle[cp] == prev[cp]:
+                cp += 1
+            prev = needle
+            needles = [needle] * len(haystacks)
+            *got, S = _sw_skewed(needles, hay, DEFAULT_SCORING, compute_typos,
+                                 resume=(S, cp))
+            want = sw_batch(needles, haystacks, compute_typos=compute_typos)
+            # the resumed matrix is full height even without typos
+            np.testing.assert_array_equal(S, _sw_skewed(needles, hay, DEFAULT_SCORING, True)[3])
+            for g, w in zip(got, want):
+                np.testing.assert_array_equal(g, w, err_msg=f"{needle!r} cp={cp}")
 
 
 class TestSelfScores:
